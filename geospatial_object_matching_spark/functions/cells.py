@@ -5,11 +5,8 @@ at zoom ``z`` the world is a 2^z × 2^z grid; ``cell_id`` packs
 ``(zoom, x, y)`` into one int64 so it behaves like an H3/S2 index
 (hierarchical: parent = child cell at zoom-1 via bit shift).
 
-Also here: ray-casting point-in-polygon, tile rasterization (exact
-Sutherland–Hodgman polygon/tile clipping → coverage fraction), and the
-d-dimensional feature-space grid used by the kNN join's neighbor-ring
-expansion (reference analog: the global KDTree at blocking.py:113-114,
-re-expressed as a cell-partitioned join per BASELINE.json north_rule).
+Also here: ray-casting point-in-polygon and tile rasterization (exact
+Sutherland–Hodgman polygon/tile clipping → coverage fraction).
 """
 
 from __future__ import annotations
@@ -249,35 +246,3 @@ def rasterize_footprint(poly_lonlat: np.ndarray, zoom: int):
             if cov > COVERAGE_EPS:
                 out.append((tx, ty, float(cov)))
     return out
-
-
-# --------------------------------------------------------------------------
-# feature-space grid for the kNN join (blocking.py KDTree analog)
-# --------------------------------------------------------------------------
-
-
-def feature_grid_cells(vectors: np.ndarray, cell_width: float, dims: int | None = None) -> np.ndarray:
-    """Integer grid keys for d-dim scaled feature vectors, packed to int64.
-
-    Only the first ``min(d, 3)`` dimensions participate in the grid (the
-    remaining dims still participate in distances); 21 bits per dim, offset
-    to keep keys positive.
-    """
-    v = np.asarray(vectors, dtype=np.float64)
-    if v.ndim == 1:
-        v = v[:, None]
-    d = min(v.shape[1], dims if dims is not None else 3, 3)
-    idx = np.floor(v[:, :d] / cell_width).astype(np.int64) + (1 << 20)
-    key = np.zeros(len(v), dtype=np.int64)
-    for j in range(d):
-        key = (key << np.int64(21)) | (idx[:, j] & np.int64((1 << 21) - 1))
-    return key
-
-
-def grid_neighbor_offsets(d: int, ring: int) -> np.ndarray:
-    """All offset tuples with Chebyshev norm == ring (the ring shell)."""
-    rng = np.arange(-ring, ring + 1)
-    grids = np.meshgrid(*([rng] * d), indexing="ij")
-    pts = np.stack([g.ravel() for g in grids], axis=1)
-    cheb = np.abs(pts).max(axis=1)
-    return pts[cheb == ring]

@@ -21,6 +21,8 @@ reference process_pairs.py + bkafi_with_threshold.py + classifier.py).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -179,6 +181,16 @@ def threshold_stats(
     # sorted percentile/threshold arrays (ascending percentile)
     ps = sorted(thresholds)
     ts = [thresholds[p] for p in ps]
+    # the WHEN tree below is a binary search, so the thresholds must
+    # ascend with percentile — in Spark's double order, where NaN sorts
+    # above +inf (an approximate percentile source can break this)
+    spark_order = [(math.isnan(t), 0.0 if math.isnan(t) else t) for t in ts]
+    for i in range(1, len(ts)):
+        if spark_order[i - 1] > spark_order[i]:
+            raise ValueError(
+                "threshold_stats needs thresholds ascending in percentile: "
+                f"p={ps[i - 1]} -> {ts[i - 1]!r} but p={ps[i]} -> {ts[i]!r}"
+            )
 
     # bucket = number of thresholds strictly below dist = index of the
     # smallest percentile that still admits the row. Computed as a

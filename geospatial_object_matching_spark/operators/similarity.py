@@ -631,300 +631,6 @@ def dense_cosine_topk_batched(
     return out
 
 
-# --------------------------------------------------------------------------
-# product quantization (round 5) — the memory-compression scale path:
-# at 10^12 documents a float64 embedding column is ~0.8 PB; PQ codes at
-# n_subspaces bytes/vector (4 here) are ~4 TB, small enough to keep the
-# searchable index hot while the raw vectors stay cold on parquet. The
-# FAISS IndexPQ / ADC analog, Spark-first: codebooks are driver-fit on a
-# bounded sample and broadcast; assignment and the ADC scan are
-# Arrow-batched map passes with no shuffle except the final |Q|·k rank
-# merge (the bigindex pattern).
-# --------------------------------------------------------------------------
-
-
-def pq_fit(
-    embeddings: DataFrame,
-    n_subspaces: int = 4,
-    n_codes: int = 16,
-    sample_cap: int = 10_000,
-    seed: int = 7,
-    n_iters: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Fit PQ codebooks — the PQ SPEC (deterministic, reimplementable
-    from this docstring like the IVF/LSH specs):
-
-    - vectors are L2-normalized first (zero rows stay zero), so the ADC
-      inner-product score approximates cosine;
-    - dims split into ``n_subspaces`` contiguous blocks, boundaries
-      ``bounds[s] = (s * d) // n_subspaces``;
-    - per subspace s: EUCLIDEAN k-means on the subvectors of a bounded
-      deterministic sample (first ``sample_cap`` rows by ascending id) —
-      init ``Generator(PCG64(seed + s)).choice(n, n_codes, False)`` rows,
-      ``n_iters`` Lloyd rounds (assign = argmin squared distance, first
-      min wins; empty cluster keeps its centroid), centroids ROUNDED to
-      9 decimals each round (spec rounding: independent implementations
-      cannot drift by ulps across iterations).
-    """
-    rows = (
-        embeddings.filter(F.col(vec_col).isNotNull())
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(sample_cap)
-        .collect()
-    )
-    X = np.array([r[1] for r in rows], dtype=np.float64)
-    nrm = np.linalg.norm(X, axis=1, keepdims=True)
-    X = np.where(nrm > 0, X / np.where(nrm == 0, 1.0, nrm), 0.0)
-    d = X.shape[1]
-    bounds = [(s * d) // n_subspaces for s in range(n_subspaces + 1)]
-    codebooks = []
-    for s in range(n_subspaces):
-        Xs = np.ascontiguousarray(X[:, bounds[s] : bounds[s + 1]])
-        rng = np.random.Generator(np.random.PCG64(seed + s))
-        k_eff = min(n_codes, len(Xs))
-        init = rng.choice(len(Xs), size=k_eff, replace=False)
-        C = np.round(Xs[init].copy(), 9)
-        for _ in range(n_iters):
-            d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = np.argmin(d2, axis=1)
-            for c in range(len(C)):
-                m = assign == c
-                if m.any():
-                    C[c] = Xs[m].mean(axis=0)
-            C = np.round(C, 9)
-        codebooks.append(C)
-    return {"bounds": bounds, "codebooks": codebooks}
-
-
-def pq_assign(
-    embeddings: DataFrame,
-    model: dict,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>) — nearest codebook entry per subspace
-    (argmin squared distance on the L2-normalized vector, first min
-    wins). One Arrow map pass, codebooks broadcast."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    spark = embeddings.sparkSession
-    bc = spark.sparkContext.broadcast(
-        (model["bounds"], [c.tolist() for c in model["codebooks"]])
-    )
-    id_type = embeddings.schema[id_col].dataType
-
-    def gen(batches):
-        bounds, cbs = bc.value
-        cbs = [np.asarray(c) for c in cbs]
-        dim = bounds[-1]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # malformed (ragged/short) vectors are silently dropped, the
-            # bigindex contract — one bad row must not kill the batch
-            lens = np.fromiter(
-                (len(v) for v in pdf[vec_col]), dtype=np.int64, count=len(pdf)
-            )
-            pdf = pdf[lens == dim]
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            nrm = np.linalg.norm(X, axis=1, keepdims=True)
-            X = np.where(nrm > 0, X / np.where(nrm == 0, 1.0, nrm), 0.0)
-            codes = np.empty((len(X), len(cbs)), dtype=np.int32)
-            for s, C in enumerate(cbs):
-                Xs = X[:, bounds[s] : bounds[s + 1]]
-                d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-                codes[:, s] = np.argmin(d2, axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField("codes", T.ArrayType(T.IntegerType()), False),
-        ]
-    )
-    return embeddings.filter(F.col(vec_col).isNotNull()).mapInPandas(
-        gen, schema
-    )
-
-
-def pq_topk_adc(
-    codes_df: DataFrame,
-    queries: DataFrame,
-    model: dict,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_cap: int = 200_000,
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Approximate top-k by asymmetric distance computation over PQ codes:
-    per query a (n_subspaces × n_codes) LUT of inner products
-    ``<q_sub, centroid>`` is built once, then every index row's score is
-    a code-gather sum — O(n_subspaces) per (query, row) instead of O(d),
-    over a code table ~d·8/n_subspaces times smaller than the vectors.
-    Output (query_id, vec_id, rank, score): rank by score desc, ties by
-    vec_id asc. Shape mirrors ``dense_cosine_topk_bigindex``: bounded
-    query batch broadcast, codes streamed, WindowGroupLimit-pruned rank
-    merge of |Q|·k rows per partition."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    n_q = queries.count()
-    if n_q > query_cap:
-        raise ValueError(
-            f"query batch has {n_q} rows > cap {query_cap}; batch the "
-            "queries (per-query results are independent)"
-        )
-    q_pdf = queries.select(id_col, vec_col).toPandas()
-    Q = np.stack(q_pdf[vec_col].to_numpy()).astype(np.float64)
-    qn = np.linalg.norm(Q, axis=1, keepdims=True)
-    Q = np.where(qn > 0, Q / np.where(qn == 0, 1.0, qn), 0.0)
-    qids = np.asarray(q_pdf[id_col])
-    bounds = model["bounds"]
-    n_sub = len(model["codebooks"])
-    # LUTs: (|Q|, n_sub, n_codes)
-    luts = np.stack(
-        [
-            Q[:, bounds[s] : bounds[s + 1]] @ model["codebooks"][s].T
-            for s in range(n_sub)
-        ],
-        axis=1,
-    )
-    spark = codes_df.sparkSession
-    bc = spark.sparkContext.broadcast((qids, luts))
-
-    q_id_type = queries.schema[id_col].dataType
-    b_id_type = codes_df.schema[id_col].dataType
-    part_schema = T.StructType(
-        [
-            T.StructField("query_id", q_id_type),
-            T.StructField("vec_id", b_id_type),
-            T.StructField("score", T.DoubleType(), False),
-        ]
-    )
-
-    def gen(batches):
-        qids_l, luts_l = bc.value
-        nq = len(qids_l)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids_i = pdf["vec_id"].to_numpy()
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            nb = len(ids_i)
-            m = min(k, nb)
-            # tie order: string ids sort as strings, native (numeric) ids
-            # in native order — the SAME key the final rank window's
-            # F.asc("vec_id") sorts by (dense_cosine_topk_bigindex rule;
-            # PQ score ties are common — identical codes, identical ADC)
-            ids_key = ids_i.astype(str) if ids_i.dtype == object else ids_i
-            id_order = np.argsort(ids_key, kind="stable")
-            id_rank = np.empty(nb, dtype=np.int64)
-            id_rank[id_order] = np.arange(nb)
-            out_q, out_i, out_s = [], [], []
-            # chunk queries like dense_cosine_topk_bigindex: an unchunked
-            # (|Q| x batch) float64 score matrix at the 200k query cap is
-            # ~16 GB per task
-            qchunk = max(1, 4_000_000 // max(nb, 1))
-            for q0 in range(0, nq, qchunk):
-                q1 = min(q0 + qchunk, nq)
-                scores = np.zeros((q1 - q0, nb))
-                for s in range(codes.shape[1]):
-                    scores += luts_l[q0:q1, s, :][:, codes[:, s]]
-                for qi in range(q0, q1):
-                    sc = scores[qi - q0]
-                    if exclude_self:
-                        self_m = ids_i == qids_l[qi]
-                        if self_m.any():
-                            sc = sc.copy()
-                            sc[self_m] = -np.inf
-                    sel = np.lexsort((id_rank, -sc))[:m]
-                    if exclude_self:
-                        sel = sel[np.isfinite(sc[sel])]
-                    out_q.extend([qids_l[qi]] * len(sel))
-                    out_i.extend(ids_i[sel])
-                    out_s.extend(sc[sel])
-            if out_q:
-                yield pd.DataFrame(
-                    {"query_id": out_q, "vec_id": out_i, "score": out_s}
-                )
-
-    partial = codes_df.select(
-        F.col(id_col).alias("vec_id"), "codes"
-    ).mapInPandas(gen, part_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("vec_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "score")
-    )
-
-
-def pq_topk_rerank(
-    codes_df: DataFrame,
-    embeddings: DataFrame,
-    queries: DataFrame,
-    model: dict,
-    k: int = 10,
-    k_short: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """The standard PQ search composition: ADC shortlist of ``k_short``
-    candidates from the compressed codes, then EXACT cosine re-rank of
-    the shortlist against the raw vectors (pure JVM ``aggregate``/
-    ``zip_with`` expressions — only |Q|·k_short rows ever touch a raw
-    vector, so the hot scan stays on the ~d·8/n_subspaces-times-smaller
-    code table). Measured on 8-cluster synthetic vectors: a 50-row
-    shortlist from 4x16 codes captures 100% of the exact top-10
-    (tests/test_dedup.py::TestProductQuantization)."""
-    short = pq_topk_adc(
-        codes_df,
-        queries,
-        model,
-        k=k_short,
-        id_col=id_col,
-        vec_col=vec_col,
-        exclude_self=exclude_self,
-    ).select("query_id", "vec_id")
-    qe = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    be = embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("bv"),
-    )
-    # zero-norm guard: a degenerate vector must score 0.0, not NaN —
-    # Spark's ORDER BY DESC places NaN first, which would outrank every
-    # real match (the documented zero-norm semantics of the dense kernels)
-    nprod = _norm("qv") * _norm("bv")
-    cos = F.when(nprod == 0.0, F.lit(0.0)).otherwise(_dot("qv", "bv") / nprod)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        short.join(qe, "query_id")
-        .join(be, "vec_id")
-        .select("query_id", "vec_id", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "cosine")
-    )
-
-
 def _projection_matrix(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     rng = np.random.Generator(np.random.PCG64(seed))
     return rng.normal(0.0, 1.0, (n_planes, dim)).tolist()
@@ -1063,18 +769,20 @@ def _centroid_dot_sql(vec_sql: str, centroid: np.ndarray) -> str:
     over double literals — ``repr`` round-trips every float64 exactly),
     but ONE py4j round-trip per centroid instead of one per component:
     building 16 centroids x 64 ``F.lit`` Columns cost ~1 s of driver time
-    per plan construction (measured sf1)."""
+    per plan construction (measured sf1).
+
+    A non-finite component has no SQL double literal (``repr`` gives
+    ``nanD``/``infD``, which the parser rejects), so it raises here."""
+    centroid = np.asarray(centroid, dtype=np.float64)
+    if not np.isfinite(centroid).all():
+        raise ValueError(
+            "IVF centroid has non-finite components; "
+            "non-finite input vectors must be filtered before k-means"
+        )
     arr = ",".join(f"{float(x)!r}D" for x in centroid)
     return (
         f"aggregate(zip_with({vec_sql}, array({arr}), (x, y) -> x * y), "
         f"0.0D, (acc, x) -> acc + x)"
-    )
-
-
-def _centroid_dot(vec, centroid: np.ndarray):
-    arr = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(vec, arr, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
     )
 
 

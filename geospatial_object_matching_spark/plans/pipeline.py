@@ -44,7 +44,6 @@ def run_pipeline(
     decision_percentile: float = 0.95,
     zoom: int = 15,
     checkpoints: CheckpointManager | None = None,
-    knn_strategy: str = "auto",
     conf: EngineConf = DEFAULT_CONF,
     with_features: bool = True,
 ) -> dict:
@@ -96,20 +95,6 @@ def run_pipeline(
         )
         return int(row["n_c"]), int(row["n_i"]), int(row["n_int"])
 
-    import os as _os
-    import sys as _sys
-    import time as _time
-
-    _t0 = _time.time()
-
-    def _phase(msg: str) -> None:
-        if _os.environ.get("SPARK_GRAFT_PHASE_LOG"):
-            print(
-                f"[phase] {msg} @ {_time.time() - _t0:.1f}s",
-                file=_sys.stderr,
-                flush=True,
-            )
-
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_order = pool.submit(bkafi_feature_order, properties, "std")
         f_cnt = pool.submit(job_counts)
@@ -121,7 +106,6 @@ def run_pipeline(
     scaler_stats = robust_scaler_fit(
         properties.filter(F.col("source") == "cands"), feats
     )
-    _phase("A done (order+fit)")
 
     cands_v, index_v = bkafi_vectors(properties, feats, stats=scaler_stats)
     cands_v, index_v = cands_v.persist(), index_v.persist()
@@ -129,7 +113,7 @@ def run_pipeline(
     def job_candidates():
         df = stage(
             "candidates",
-            lambda: knn_join(cands_v, index_v, k, strategy=knn_strategy, conf=conf),
+            lambda: knn_join(cands_v, index_v, k, strategy="auto", conf=conf),
             params={"dim": bkafi_dim, "k": k},
         ).persist()
         df.count()  # materialize inside the thread — that's the overlap
@@ -144,9 +128,7 @@ def run_pipeline(
         f_cand = pool.submit(job_candidates)
         f_thr = pool.submit(job_thresholds)
         thresholds = f_thr.result()
-        _phase("B thresholds done")
         candidates = f_cand.result()
-        _phase("B kNN done")
     n_c, n_i, n_int = f_cnt.result()
 
     thr = thresholds[decision_percentile]

@@ -16,8 +16,8 @@ from geospatial_object_matching_spark.operators.blocking import (
 )
 from geospatial_object_matching_spark.operators.extract import extract_objects
 from geospatial_object_matching_spark.operators.knn import (
+    knn_join,
     knn_join_broadcast,
-    knn_join_equidepth,
     knn_join_grid,
 )
 from geospatial_object_matching_spark.operators.properties import compute_properties
@@ -231,20 +231,6 @@ class TestBlocking:
         )
         np.testing.assert_allclose(b["dist"], g["dist"], atol=1e-9)
 
-    def test_equidepth_strategy_equals_broadcast(self, properties):
-        order = bkafi_feature_order(properties)
-        cands, index = bkafi_vectors(properties, order[:3])
-        cands, index = cands.persist(), index.persist()
-        b = knn_join_broadcast(cands, index, 10).toPandas()
-        e = knn_join_equidepth(cands, index, 10, rows_per_bin=8).toPandas()
-        key = ["cand_id", "rank"]
-        b = b.sort_values(key).reset_index(drop=True)
-        e = e.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            b[["cand_id", "index_id", "rank"]], e[["cand_id", "index_id", "rank"]]
-        )
-        np.testing.assert_allclose(b["dist"], e["dist"], atol=1e-9)
-
     def test_range_strategy_equals_broadcast(self, properties):
         from geospatial_object_matching_spark.operators.knn import knn_join_range
 
@@ -353,11 +339,6 @@ class TestBlocking:
             .sort_values(["cand_id", "rank"])
             .reset_index(drop=True)
         )
-        from geospatial_object_matching_spark.operators.knn import (
-            knn_join_equidepth,
-            knn_join_grid,
-        )
-
         for got in (
             knn_join_broadcast(cand, idx, k, round_dists=None).toPandas(),
             knn_join_range(
@@ -367,9 +348,6 @@ class TestBlocking:
             # NaN LAST in ascending ORDER BY, matching the kernel's
             # (dist, id) lexsort
             knn_join_grid(cand, idx, k, 0.3, round_dists=None).toPandas(),
-            knn_join_equidepth(
-                cand, idx, k, round_dists=None, rows_per_bin=4
-            ).toPandas(),
         ):
             got = got.sort_values(["cand_id", "rank"]).reset_index(drop=True)
             pd.testing.assert_frame_equal(
@@ -417,39 +395,43 @@ class TestBlocking:
                 got_d, [d[i] for i in order], atol=1e-12
             )
 
-    def test_equidepth_many_bins_equals_broadcast(self, spark):
-        """One bin per index row (n_bins == n_index): exercises the
-        runtime-sequence shell + broadcast-boundary gap udf (round-2
-        de-literaling) — the plan must not embed per-bin literals and the
-        result must still be exact."""
-        import pyspark.sql.functions as F
+    def test_batch_searcher_equals_scalar(self):
+        """Differential check of the two Morton-block kernels on
+        adversarial input: many small blocks, duplicate rows, NaN
+        coordinates (both sides), a NaN-only dimension block and more
+        queries than one QB chunk. Ids AND distances must be identical."""
+        from geospatial_object_matching_spark.operators.knn import (
+            _make_batch_searcher,
+            _make_local_searcher,
+        )
 
-        n_i, n_c = 600, 80
-        idx = spark.range(n_i).select(
-            F.concat(F.lit("i"), F.col("id")).alias("obj_id"),
-            F.array(
-                (F.col("id") * 0.01),
-                F.sin(F.col("id").cast("double")),
-                F.cos(F.col("id").cast("double") * 0.7),
-            ).alias("features"),
+        rng = np.random.default_rng(23)
+        n = 300
+        mat = rng.uniform(0, 1, (n, 3))
+        mat[:40] = mat[40:80]  # exact duplicate rows: (dist, id) ties
+        mat[rng.choice(n, 30, replace=False), 1] = np.nan
+        ids = np.array([f"i{i:03d}" for i in rng.permutation(n)], dtype=object)
+        q = rng.uniform(-0.2, 1.2, (2100, 3))
+        q[::97, 2] = np.nan
+        q[:n:7] = mat[::7]  # queries sitting exactly on index rows
+        for k_eff in (1, 7, 40):
+            batch = _make_batch_searcher(ids, mat, k_eff, chunk=8)(q)
+            scalar = _make_local_searcher(ids, mat, k_eff, chunk=8)
+            for qi in range(len(q)):
+                want_ids, want_d = scalar(q[qi])
+                got_ids, got_d = batch[qi]
+                assert list(got_ids) == list(want_ids), (k_eff, qi)
+                np.testing.assert_array_equal(got_d, want_d)
+
+    def test_unknown_strategy_raises(self, spark):
+        """An unknown strategy name is an error, not a silent fallback
+        to the grid strategy."""
+        df = spark.createDataFrame(
+            [("a", [0.0, 1.0])], "obj_id string, features array<double>"
         )
-        cand = spark.range(n_c).select(
-            F.concat(F.lit("c"), F.col("id")).alias("obj_id"),
-            F.array(
-                (F.col("id") * 0.07 + 0.003),
-                F.sin(F.col("id").cast("double") * 1.3),
-                F.cos(F.col("id").cast("double")),
-            ).alias("features"),
-        )
-        b = knn_join_broadcast(cand, idx, 5).toPandas()
-        e = knn_join_equidepth(cand, idx, 5, rows_per_bin=1).toPandas()
-        key = ["cand_id", "rank"]
-        b = b.sort_values(key).reset_index(drop=True)
-        e = e.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            b[["cand_id", "index_id", "rank"]], e[["cand_id", "index_id", "rank"]]
-        )
-        np.testing.assert_allclose(b["dist"], e["dist"], atol=1e-9)
+        for bad in ("equidepth", "brodcast", ""):
+            with pytest.raises(ValueError, match="unknown knn strategy"):
+                knn_join(df, df, 1, strategy=bad)
 
     def test_centroid_blocking_matches_oracle(self, objects, oracle_state):
         _, od, _ = oracle_state

@@ -136,6 +136,22 @@ class TestThresholdMatcher:
                 expected["reduction_ratio"], abs=1e-9
             ), p
 
+    def test_threshold_stats_rejects_non_monotone(self, spark):
+        """The bucket WHEN tree is a binary search over the thresholds in
+        percentile order; a mapping that does not ascend must raise
+        instead of mis-bucketing rows. NaN sorts last (Spark order), so
+        a NaN top threshold is still ascending."""
+        cands = spark.createDataFrame(
+            [("a", "a", 0.2), ("a", "b", 0.6), ("b", "b", 0.9)],
+            "cand_id string, index_id string, dist double",
+        )
+        with pytest.raises(ValueError, match="ascending"):
+            threshold_stats(cands, {0.5: 0.7, 0.9: 0.3, 0.95: 1.0}, 2, 2, 2)
+        stats = threshold_stats(
+            cands, {0.5: 0.3, 0.9: 0.7, 0.95: float("nan")}, 2, 2, 2
+        )
+        assert stats["cand_pairs_num"].tolist() == [1, 2, 3]
+
     def test_precision_recall_f1(self, spark):
         rows = [(1, 1), (1, 1), (1, 0), (0, 1), (0, 0), (0, 0)]
         df = spark.createDataFrame(rows, "pred int, label int")
