@@ -26,8 +26,15 @@ its quirks:
 
 from __future__ import annotations
 
+import ctypes
+import functools
+import hashlib
 import math
 import os
+import pkgutil
+import shutil
+import subprocess
+import tempfile
 
 import numpy as np
 
@@ -148,7 +155,8 @@ def mesh_perimeter(coords: np.ndarray, offsets: np.ndarray) -> float:
 
 
 # --------------------------------------------------------------------------
-# convex hulls (scipy is absent in this environment — hand-rolled numpy)
+# convex hulls (no scipy: a numpy 2-D monotone chain, and an exact 3-D
+# hull compiled from _hull3d.c with its Python twin as fallback)
 # --------------------------------------------------------------------------
 
 
@@ -244,6 +252,17 @@ def _snap_center(m: np.ndarray, coord_max: float) -> np.ndarray:
     return np.rint(m / pitch) * pitch
 
 
+def _unique_rows(q: np.ndarray) -> np.ndarray:
+    """``np.unique(q, axis=0)`` for an (m, 3) int64 array (rows sorted
+    lexicographically, duplicates dropped) at a third of its per-call cost
+    on hull-sized inputs."""
+    q = q[np.lexsort((q[:, 2], q[:, 1], q[:, 0]))]
+    keep = np.empty(len(q), dtype=bool)
+    keep[:1] = True
+    np.any(q[1:] != q[:-1], axis=1, out=keep[1:])
+    return q[keep]
+
+
 def quantize_hull_points(points: np.ndarray, assume_unique: bool = False):
     """Snap unique vertices to the HULL_GRID integer lattice (see HULL_GRID).
 
@@ -271,8 +290,7 @@ def quantize_hull_points(points: np.ndarray, assume_unique: bool = False):
     scale = float(np.abs(pts).max())
     if not (scale > 0.0 and np.isfinite(scale)):
         return None, 0.0
-    q = np.rint(pts * (float(HULL_GRID) / scale)).astype(np.int64)
-    q = np.unique(q, axis=0)
+    q = _unique_rows(np.rint(pts * (float(HULL_GRID) / scale)).astype(np.int64))
     if len(q) < 4:
         return None, 0.0
     return q, scale / float(HULL_GRID)
@@ -313,6 +331,10 @@ def _hull_vol6_exact(q: np.ndarray) -> int:
     """EXACT 6x volume (lattice units) of the convex hull of integer lattice
     points, via beneath-beyond incremental insertion with exact integer
     predicates.
+
+    The engine runs the compiled twin of this kernel (``_hull3d.c``, see
+    ``_hull3d_c``); this Python version is its fallback where no C compiler
+    is available and its reference in the differential tests.
 
     Fast path: per-point visibility is ONE vectorized float matvec over a
     (F,5) face array [nx,ny,nz,d,guard]; only values inside the guard band
@@ -492,6 +514,85 @@ def _hull_vol6_exact(q: np.ndarray) -> int:
     return vol6 if vol6 >= 0 else -vol6
 
 
+_HULL3D_ERRORS = {1: "lattice coordinate outside [-2**30, 2**30]",
+                  2: "out of memory"}
+
+
+def _load_hull3d():
+    """Build and load the C hull kernel: ``gom_hull3d_vol6`` from
+    ``_hull3d.c``, or None when it cannot be built or loaded here (no
+    ``gcc``, compile error, unloadable library) — callers then use the
+    Python kernel, which returns the same exact integer.
+
+    The source is read with ``pkgutil.get_data``, so this also works when
+    the package is imported from a zip (spark-submit ``--py-files``).  The
+    library is cached as ``<tempdir>/gom-hull3d-<sha256[:16]>.so``, keyed
+    by the source; each build goes to a private name and is
+    ``os.replace``-d into place, so concurrent workers never load a
+    half-written file.
+    """
+    try:
+        src = pkgutil.get_data(__package__, "_hull3d.c")
+    except OSError:
+        return None
+    if src is None:
+        return None
+    so = os.path.join(
+        tempfile.gettempdir(),
+        f"gom-hull3d-{hashlib.sha256(src).hexdigest()[:16]}.so",
+    )
+    if not os.path.exists(so):
+        cc = shutil.which("gcc")
+        if cc is None:
+            return None
+        try:
+            with tempfile.TemporaryDirectory(prefix="gom-hull3d-") as tmp:
+                c_path = os.path.join(tmp, "_hull3d.c")
+                so_tmp = os.path.join(tmp, "hull3d.so")
+                with open(c_path, "wb") as f:
+                    f.write(src)
+                subprocess.run(
+                    [cc, "-O2", "-shared", "-fPIC", "-o", so_tmp, c_path],
+                    check=True, capture_output=True, timeout=120,
+                )
+                os.replace(so_tmp, so)
+        except (OSError, subprocess.SubprocessError):
+            return None
+    try:
+        fn = ctypes.CDLL(so).gom_hull3d_vol6
+    except (OSError, AttributeError):
+        return None
+    fn.argtypes = [
+        ctypes.c_void_p,
+        ctypes.c_int64,
+        ctypes.POINTER(ctypes.c_int64),
+        ctypes.POINTER(ctypes.c_uint64),
+    ]
+    fn.restype = ctypes.c_int
+    return fn
+
+
+@functools.cache
+def _hull3d_c():
+    """The process's C hull kernel (loaded once), or None."""
+    return _load_hull3d()
+
+
+def _hull_vol6(q: np.ndarray) -> int:
+    """``_hull_vol6_exact(q)``, computed by the C kernel when it loaded."""
+    fn = _hull3d_c()
+    if fn is None:
+        return _hull_vol6_exact(q)
+    q = np.ascontiguousarray(q, dtype=np.int64)
+    if q.ndim != 2 or q.shape[1] != 3:
+        raise ValueError(f"3-D hull kernel: expected (m, 3) points, got {q.shape}")
+    hi, lo = ctypes.c_int64(), ctypes.c_uint64()
+    rc = fn(q.ctypes.data, len(q), ctypes.byref(hi), ctypes.byref(lo))
+    if rc:
+        raise ValueError(f"3-D hull kernel: {_HULL3D_ERRORS.get(rc, rc)}")
+    return (hi.value << 64) | lo.value
+
+
 def convex_hull_3d_volume(points: np.ndarray, assume_unique: bool = False) -> float:
     """Volume of the 3-D convex hull of the HULL_GRID-snapped vertices
     (matches ``scipy.spatial.ConvexHull(pts).volume`` to ~1e-9 relative;
@@ -501,12 +602,13 @@ def convex_hull_3d_volume(points: np.ndarray, assume_unique: bool = False) -> fl
     result deterministic and scale/translation/permutation invariant by
     construction; degenerate (collinear/coplanar) inputs return 0.0 (the
     reference would raise — our engine defines 0).  O(n^2) worst case;
-    building meshes have tens to ~a hundred unique vertices.
+    building meshes have tens to ~a hundred unique vertices.  The exact
+    volume comes from the C kernel when it loaded (``_hull_vol6``).
     """
     q, cell = quantize_hull_points(points, assume_unique=assume_unique)
     if q is None:
         return 0.0
-    return float(_hull_vol6_exact(q)) / 6.0 * cell ** 3
+    return float(_hull_vol6(q)) / 6.0 * cell ** 3
 
 
 # --------------------------------------------------------------------------
@@ -638,12 +740,16 @@ def compute_properties_object(
     return out
 
 
+_PROP_CHUNK = 750
+"""Objects per ``compute_properties_batch`` slice (see its docstring)."""
+
+
 def compute_properties_batch(
-    coords_list, offsets_list, log1p: bool = True, chunk: int = 750,
+    coords_list, offsets_list, log1p: bool = True,
 ) -> dict[str, np.ndarray]:
     """Property columns for a batch of meshes → {name: float64 array}.
 
-    Processes the batch in ``chunk``-object slices: a chunk-sized slice
+    Processes the batch in ``_PROP_CHUNK``-object slices: a slice
     stays cache-resident across the kernel's ~30 vectorized passes, where
     a full 10k-object Arrow batch (~1.1M points) is memory-bandwidth-bound
     — and this host (like any oversubscribed executor) saturates DRAM
@@ -651,9 +757,8 @@ def compute_properties_batch(
     anti-scale (BENCH.md environment note). Round-5 chunk lab (1.08M
     pages, featurize stage isolated): 750 beats the old 1500 by 10% at 16
     workers and 4% at 4 (251/110 s -> 242/99 s); 375 adds only 3% more at
-    16 with no 4-core data — 750 is the default. Results are
-    chunk-invariant (all reductions are per-object).
-    
+    16 with no 4-core data — hence 750. Results are chunk-invariant (all
+    reductions are per-object).
 
     Batch-vectorized (round-3): every reduction that the per-object kernel
     ran as a tiny numpy call (area/volume fans, coordinate pools, vertex
@@ -661,7 +766,7 @@ def compute_properties_batch(
     a segment reduction (lexsort + bincount/reduceat over object ids) —
     per-call numpy dispatch on ~40-element arrays was the dominant cost,
     not FLOPs.  Only the exact convex hulls stay per-object (they are
-    branchy integer geometry; see ``_hull_vol6_exact``).
+    branchy integer geometry; the 3-D one runs compiled, see ``_hull_vol6``).
 
     Semantics are identical to ``compute_properties_object`` (same
     reference formulas, object_properties.py citations there); summation
@@ -669,23 +774,15 @@ def compute_properties_batch(
     relative — far below the 1e-6 rounding the driver oracle compares at.
     ``tests/test_geometry_properties.py`` asserts batch≡object parity.
     """
-    # experiment knob (round-5 scaling lab): override the slice size per
-    # process; results are chunk-invariant (reductions are per-object)
-    # defensive parse: a malformed or non-positive override would raise
-    # inside every executor task / break the slicing range — ignore it
-    env_chunk = os.environ.get("SPARK_GRAFT_PROP_CHUNK")
-    if env_chunk:
-        try:
-            parsed = int(env_chunk)
-            if parsed >= 1:
-                chunk = parsed
-        except ValueError:
-            pass
     n = len(coords_list)
-    if n > chunk:
+    if n > _PROP_CHUNK:
         parts = [
-            _properties_chunk(coords_list[i : i + chunk], offsets_list[i : i + chunk], log1p)
-            for i in range(0, n, chunk)
+            _properties_chunk(
+                coords_list[i : i + _PROP_CHUNK],
+                offsets_list[i : i + _PROP_CHUNK],
+                log1p,
+            )
+            for i in range(0, n, _PROP_CHUNK)
         ]
         return {
             name: np.concatenate([p[name] for p in parts])

@@ -312,6 +312,17 @@ def _block_searcher(blk: _Blocks, k_eff: int):
     return search
 
 
+_BATCH_SCRATCH_BYTES = 64 << 20
+"""Budget for the batch searcher's three (QB, n_blocks) float64 buffers."""
+
+
+def _query_block(n_chunks: int) -> int:
+    """Queries per batch-searcher pass (``QB``): 2048, lowered so the three
+    (QB, n_chunks) float64 scratch buffers fit ``_BATCH_SCRATCH_BYTES``
+    however many blocks the index has, but never below 64."""
+    return int(np.clip(_BATCH_SCRATCH_BYTES // (3 * 8 * n_chunks), 64, 2048))
+
+
 def _make_batch_searcher(
     ids_i: np.ndarray, mat_i: np.ndarray, k_eff: int, chunk: int = 128
 ):
@@ -320,8 +331,9 @@ def _make_batch_searcher(
     same (dist, id-string) tie order), ~10x less per-query
     Python/numpy-dispatch overhead. Returns ``search_many(qmat)``.
 
-    Queries run in input order, in chunks of ``QB`` = 2048 rows; one
-    vectorized pass serves the whole chunk:
+    Queries run in input order, in chunks of ``QB`` rows
+    (:func:`_query_block`: 2048 unless the index has more than ~1.4k
+    blocks); one vectorized pass serves the whole chunk:
 
     - box lower bounds for all (query, block) pairs — elementwise
       identical to the scalar kernel's, and a PROVABLE lower bound in
@@ -365,7 +377,7 @@ def _make_batch_searcher(
     # fresh numpy temporaries page-fault brutally on memory-overcommitted
     # hosts (BENCH.md round 2) — the whole hot path below writes into
     # these buffers
-    QB = 2048
+    QB = _query_block(n_chunks)
     L = min(24, n_chunks)
     _lb = np.empty((QB, n_chunks))
     _g1 = np.empty((QB, n_chunks))

@@ -423,6 +423,33 @@ class TestBlocking:
                 assert list(got_ids) == list(want_ids), (k_eff, qi)
                 np.testing.assert_array_equal(got_d, want_d)
 
+    def test_batch_searcher_many_blocks_equals_scalar(self):
+        """An index with ~10k blocks lowers the batch searcher's query
+        block below the query count (its scratch stays under budget), and
+        the results still equal the scalar kernel's."""
+        from geospatial_object_matching_spark.operators.knn import (
+            _make_batch_searcher,
+            _make_local_searcher,
+            _query_block,
+        )
+
+        rng = np.random.default_rng(31)
+        n = 20_000
+        mat = rng.uniform(0, 1, (n, 3))
+        mat[:500] = mat[500:1000]
+        ids = np.array([f"i{i:05d}" for i in rng.permutation(n)], dtype=object)
+        q = rng.uniform(-0.1, 1.1, (700, 3))
+        q[::50] = mat[::1000][: len(q[::50])]
+        assert _query_block(-(-n // 2)) < len(q)
+        for k_eff in (1, 6):
+            batch = _make_batch_searcher(ids, mat, k_eff, chunk=2)(q)
+            scalar = _make_local_searcher(ids, mat, k_eff, chunk=2)
+            for qi in range(len(q)):
+                want_ids, want_d = scalar(q[qi])
+                got_ids, got_d = batch[qi]
+                assert list(got_ids) == list(want_ids), (k_eff, qi)
+                np.testing.assert_array_equal(got_d, want_d)
+
     def test_unknown_strategy_raises(self, spark):
         """An unknown strategy name is an error, not a silent fallback
         to the grid strategy."""
