@@ -13,8 +13,8 @@ Spark DataFrame engine:
   ``mapInPandas`` pass (reference: object_properties.py);
 - BKAFI-style blocking as an exact kNN similarity join in a learned
   low-dimensional feature space (reference: blocking.py), executed either as
-  a broadcast kNN join (small index side) or a grid-cell partitioned
-  neighbor-ring expansion join (scale path);
+  a broadcast kNN join (small index side) or a range-sliced kNN join
+  (equi-depth dim-0 slices + halo, one boundary pass; scale path);
 - ratio-kernel pair features and percentile-threshold match decisions
   (reference: process_pairs.py, bkafi_with_threshold.py);
 - web-mercator tiling, point-in-polygon, rasterized tile coverage

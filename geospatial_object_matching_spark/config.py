@@ -1,8 +1,8 @@
 """Engine constants.
 
 Mirrors the *semantics* of reference ``config.py`` (values that change query
-results), plus Spark-specific tuning knobs. Reference citations are
-file:line into /root/reference.
+results), plus the session settings a caller may choose (``EngineConf``).
+Reference citations are file:line into the reference implementation.
 """
 
 from __future__ import annotations
@@ -68,22 +68,10 @@ NON_MATCHED_RATIO = 0.2
 
 @dataclass
 class EngineConf:
-    """Physical-execution knobs; defaults sized for local[32] test runs but
-    expressed the way a 1000-executor job would set them."""
+    """Session settings for ``session.get_spark``: the shuffle partition
+    count, plus any other Spark conf passed through verbatim."""
 
     shuffle_partitions: int = 32
-    #: rows below which the kNN index side is broadcast; above it the
-    #: range-sliced strategy dispatches (round-4 measurement: range beats
-    #: broadcast 3× already at 500k rows — the driver collect dominates —
-    #: and broadcast's whole-index-per-task memory story dies long before
-    #: range's per-slice one, so the threshold sits where broadcast's
-    #: zero-shuffle advantage still wins: small dimension-table-sized
-    #: indexes like the flagship's 48k entities)
-    broadcast_index_max_rows: int = 200_000
-    #: max neighbor-ring expansion rounds before falling back to brute force
-    knn_max_rounds: int = 6
-    #: Arrow batch size for mapInPandas kernels
-    arrow_batch_rows: int = 4096
     extra_spark_conf: dict = field(default_factory=dict)
 
 

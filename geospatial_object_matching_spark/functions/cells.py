@@ -65,7 +65,7 @@ def lonlat_to_cell(lon, lat, zoom: int) -> np.ndarray:
 
 def neighbor_ring_cells(cell_id: int, ring: int = 1) -> list[int]:
     """All cells within Chebyshev distance ``ring`` (incl. self), clamped to
-    the grid. Drives kNN neighbor-ring expansion."""
+    the grid."""
     x, y, zoom = unpack_cell(np.asarray([cell_id]))
     x, y, zoom = int(x[0]), int(y[0]), int(zoom[0])
     n = 1 << zoom

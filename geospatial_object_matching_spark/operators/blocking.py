@@ -10,7 +10,7 @@ Dataflow (all DataFrame transformations):
       ├─ top-dim feature projection (BKAFI dimensionality pruning = column
       │   pruning, blocking.py:126-142)
       ├─ RobustScaler fit on cands → scaled feature vectors (A9)
-      ├─ exact kNN join (broadcast or grid strategy, operators/knn.py)
+      ├─ exact kNN join (broadcast or range strategy, operators/knn.py)
       └─ rank window 1..k → labeled candidate pairs; per-k slices are
           filter(rank<=k) over ONE ranked result — the reference's
           incremental top-k reuse (blocking.py:211-230) for free.
@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import CAND_PAIRS_PER_ITEM_LIST, DEFAULT_CONF, NN_PARAM, OBJECT_PROPERTIES, EngineConf
+from ..config import CAND_PAIRS_PER_ITEM_LIST, NN_PARAM, OBJECT_PROPERTIES
 from .knn import knn_join
 from .scaler import robust_scaler_fit, robust_scaler_transform
 
@@ -125,7 +125,6 @@ def run_bkafi_blocking(
     criterion: str = "std",
     feature_order: list[str] | None = None,
     strategy: str = "auto",
-    conf: EngineConf = DEFAULT_CONF,
     sdr_factor: bool = False,
 ) -> BlockingResult:
     """Full BKAFI blocking evaluation across ``dims``: one kNN join per
@@ -159,9 +158,9 @@ def run_bkafi_blocking(
         cands, index = bkafi_vectors(
             properties, order[:dim], stats=stats, sdr_factors=factors
         )
-        nn = knn_join(
-            cands, index, nn_param, strategy=strategy, conf=conf
-        ).withColumn("bkafi_dim", F.lit(dim))
+        nn = knn_join(cands, index, nn_param, strategy=strategy).withColumn(
+            "bkafi_dim", F.lit(dim)
+        )
         per_dim.append(nn)
     candidates = per_dim[0]
     for df in per_dim[1:]:
@@ -208,11 +207,10 @@ def centroid_blocking(
     objects: DataFrame,
     k: int = NN_PARAM,
     strategy: str = "auto",
-    conf: EngineConf = DEFAULT_CONF,
 ) -> DataFrame:
     """Exhaustive centroid L2 kNN join (reference blocking.py:62-76,
     FAISS IndexFlatL2 analog): raw 3-d centroids, no scaling."""
     vec = F.array("centroid_x", "centroid_y", "centroid_z").alias("features")
     cands = objects.filter(F.col("source") == "cands").select("obj_id", vec)
     index = objects.filter(F.col("source") == "index").select("obj_id", vec)
-    return knn_join(cands, index, k, strategy=strategy, conf=conf)
+    return knn_join(cands, index, k, strategy=strategy)

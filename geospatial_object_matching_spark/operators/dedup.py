@@ -19,7 +19,6 @@ only in the signature kernels (Arrow-batched).
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -169,6 +168,10 @@ def minhash_signatures(
     return narrow.mapInPandas(kernel, schema=schema)
 
 
+#: size cap for broadcasting the signature table in ``minhash_lsh_pairs``
+_SIGNATURE_BROADCAST_BYTES = 128 << 20
+
+
 def minhash_lsh_pairs(
     signatures: DataFrame,
     bands: int = 16,
@@ -191,19 +194,14 @@ def minhash_lsh_pairs(
     50k docs / 38.8M pairs, local[32]: 57.7 s end-to-end vs 16.4 s with
     broadcast back-joins; guide §3.1). With ``n_ids`` the operator
     broadcasts the signature table iff its estimated bytes fit
-    ``SPARK_GRAFT_SIG_BCAST_MB`` (default 128 MB — ~240k docs at 64
-    hashes); above the cap, or when ``n_ids`` is unknown, the planner's
+    ``_SIGNATURE_BROADCAST_BYTES`` (128 MB — ~240k docs at 64 hashes);
+    above the cap, or when ``n_ids`` is unknown, the planner's
     own choice stands (sort-merge at scale: correct, spills gracefully)."""
     if n_hashes is None:
         n_hashes = len(signatures.select("signature").first()[0])
     bcast_sigs = False
     if n_ids is not None:
-        try:
-            cap_mb = float(os.environ.get("SPARK_GRAFT_SIG_BCAST_MB", "128"))
-        except ValueError:
-            cap_mb = 128.0
-        est_bytes = n_ids * (16 + 8 * n_hashes)
-        bcast_sigs = est_bytes <= cap_mb * (1 << 20)
+        bcast_sigs = n_ids * (16 + 8 * n_hashes) <= _SIGNATURE_BROADCAST_BYTES
     rows_per_band = n_hashes // bands
     # band rows carry ONLY (id, band, bucket): the 64-long signature array
     # (~1 KB/row) must not ride through the bands-x self-join shuffle and

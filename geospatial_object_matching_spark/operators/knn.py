@@ -9,18 +9,13 @@ per-task Morton-block kernel (``_make_batch_searcher``):
   exact top-k against the full matrix. This is the Spark analog of
   "build one KDTree and query it".
 
-- **range**: beyond ``conf.broadcast_index_max_rows`` index rows, dim-0
+- **range**: beyond ``_BROADCAST_INDEX_MAX_ROWS`` index rows, dim-0
   quantiles cut the index into equal-depth slices (plus a halo of
   neighbour slices) that are cogrouped with the candidates, so the index
   never reaches the driver. Candidates whose kth-ball crosses their
   slice edge are finished in one broadcast pass over the index.
 
-``strategy="grid"`` selects a JVM-only variant: cell-partitioned
-neighbor-ring expansion (equi-join on integer grid cells, running top-k
-per candidate via a rank window, retirement once the kth distance is
-below the ring bound — proof in the ``knn_join_grid`` docstring).
-
-All strategies return identical rows: (cand_id, index_id, rank, dist)
+Both strategies return identical rows: (cand_id, index_id, rank, dist)
 with rank 1..k ordered by (dist, index_id) — the deterministic tie-break
 the oracle uses (SURVEY.md §4.4).
 """
@@ -35,14 +30,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 import pyspark.sql.types as T
 
-from ..config import DEFAULT_CONF, EngineConf
-
 # dist is nullable ONLY because pyarrow's pandas->Arrow conversion encodes
 # float NaN as Arrow NULL: the Python kernels never emit a true null, so
 # every strategy coalesces null back to NaN right after its Arrow boundary
-# (keeping parity with the JVM-expression strategies, where NaN flows
-# through sqrt/agg natively and sorts LAST in ascending windows — a null
-# would sort FIRST and corrupt the (dist, id) rank order).
+# (NaN sorts LAST in the ascending rank windows — a null would sort FIRST
+# and corrupt the (dist, id) rank order).
 KNN_SCHEMA = T.StructType(
     [
         T.StructField("cand_id", T.StringType(), False),
@@ -53,17 +45,14 @@ KNN_SCHEMA = T.StructType(
 )
 _NAN = float("nan")
 
-
-def _dist_expr(a: str, b: str):
-    """JVM-side euclidean distance between two array<double> columns —
-    whole-stage-codegen friendly, no Python."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+#: rows above which ``knn_join(strategy="auto")`` picks the range-sliced
+#: strategy instead of broadcast (round-4 measurement: range beats
+#: broadcast 3× already at 500k rows — the driver collect dominates —
+#: and broadcast's whole-index-per-task memory story dies long before
+#: range's per-slice one, so the threshold sits where broadcast's
+#: zero-shuffle advantage still wins: small dimension-table-sized
+#: indexes like the flagship's 48k entities)
+_BROADCAST_INDEX_MAX_ROWS = 200_000
 
 
 # --------------------------------------------------------------------------
@@ -538,154 +527,6 @@ def _make_batch_searcher(
     return search_many
 
 
-# --------------------------------------------------------------------------
-# grid strategy (neighbor-ring expansion)
-# --------------------------------------------------------------------------
-
-
-def _grid_coord_cols(df: DataFrame, features_col: str, width: float, gdims: int):
-    out = df
-    for j in range(gdims):
-        out = out.withColumn(
-            f"_g{j}",
-            F.floor(F.element_at(F.col(features_col), j + 1) / F.lit(width)).cast(
-                "long"
-            ),
-        )
-    return out
-
-
-def _shell_offsets(gdims: int, ring: int) -> list[tuple[int, ...]]:
-    rng = range(-ring, ring + 1)
-    if gdims == 1:
-        pts = [(x,) for x in rng]
-    elif gdims == 2:
-        pts = [(x, y) for x in rng for y in rng]
-    else:
-        pts = [(x, y, z) for x in rng for y in rng for z in rng]
-    return [p for p in pts if max(abs(v) for v in p) == ring]
-
-
-def knn_join_grid(
-    cands: DataFrame,
-    index: DataFrame,
-    k: int,
-    grid_width: float,
-    id_col: str = "obj_id",
-    features_col: str = "features",
-    round_dists: int | None = 3,
-    conf: EngineConf = DEFAULT_CONF,
-) -> DataFrame:
-    """Exact kNN via grid-cell neighbor-ring expansion.
-
-    Completeness invariant (_ring_bound): after searching Chebyshev shells
-    0..r, any unsearched index point differs by ≥ r+1 cells in some grid
-    dim, hence by ≥ r·width in that coordinate, hence its full-space
-    distance is ≥ r·width. A candidate whose kth-best distance is
-    strictly below r·width can therefore never improve → retired.
-    """
-    spark = cands.sparkSession
-    n_dims = len(cands.select(features_col).first()[0])
-    gdims = min(n_dims, 3)
-
-    idx_g = _grid_coord_cols(
-        index.select(F.col(id_col).alias("index_id"), F.col(features_col).alias("_fi")),
-        "_fi",
-        grid_width,
-        gdims,
-    ).persist()
-    idx_g.count()
-
-    remaining = _grid_coord_cols(
-        cands.select(F.col(id_col).alias("cand_id"), F.col(features_col).alias("_fc")),
-        "_fc",
-        grid_width,
-        gdims,
-    ).persist()
-
-    gcols = [f"_g{j}" for j in range(gdims)]
-    best: DataFrame | None = None
-    w = Window.partitionBy("cand_id").orderBy("dist", "index_id")
-
-    for r in range(conf.knn_max_rounds + 1):
-        if remaining.isEmpty():
-            break
-        shell = _shell_offsets(gdims, r)
-        offsets_df = spark.createDataFrame(
-            [tuple(int(v) for v in o) for o in shell],
-            schema=", ".join(f"_d{j} long" for j in range(gdims)),
-        )
-        probes = remaining.crossJoin(F.broadcast(offsets_df))
-        join_cond = [
-            probes[f"_g{j}"] + probes[f"_d{j}"] == idx_g[f"_g{j}"] for j in range(gdims)
-        ]
-        new_pairs = (
-            probes.join(idx_g, join_cond, "inner")
-            .select(
-                "cand_id",
-                "index_id",
-                _dist_expr("_fc", "_fi").alias("dist"),
-            )
-        )
-        round_best = (
-            new_pairs
-            if best is None
-            else best.select("cand_id", "index_id", "dist").unionByName(new_pairs)
-        )
-        # localCheckpoint truncates lineage: the loop otherwise nests every
-        # previous round's plan inside the next (plan size grows
-        # exponentially with rounds — OOMs Catalyst at ~10 rounds)
-        round_best = (
-            round_best.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .localCheckpoint(eager=True)
-        )
-        if best is not None:
-            best.unpersist()
-        best = round_best
-
-        # retire candidates: kth distance strictly below the ring bound
-        stats = best.groupBy("cand_id").agg(
-            F.count("*").alias("_n"), F.max("dist").alias("_kth")
-        )
-        done_ids = stats.filter(
-            (F.col("_n") >= F.lit(k)) & (F.col("_kth") < F.lit(float(r) * grid_width))
-        ).select("cand_id")
-        new_remaining = remaining.join(
-            done_ids, remaining["cand_id"] == done_ids["cand_id"], "left_anti"
-        ).localCheckpoint(eager=True)
-        remaining.unpersist()
-        remaining = new_remaining
-
-    # stragglers (sparse regions): exact brute-force against the full index
-    if not remaining.isEmpty():
-        brute = knn_join_broadcast(
-            remaining.select(
-                F.col("cand_id").alias(id_col), F.col("_fc").alias(features_col)
-            ),
-            idx_g.select(
-                F.col("index_id").alias(id_col), F.col("_fi").alias(features_col)
-            ),
-            k,
-            id_col=id_col,
-            features_col=features_col,
-            round_dists=None,
-        )
-        done_pairs = best.join(
-            remaining.select("cand_id"), "cand_id", "left_anti"
-        ).select("cand_id", "index_id", "dist")
-        best = done_pairs.unionByName(
-            brute.select("cand_id", "index_id", "dist")
-        )
-    else:
-        best = best.select("cand_id", "index_id", "dist")
-
-    out = best.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if round_dists is not None:
-        out = out.withColumn("dist", F.round("dist", round_dists))
-    return out.select("cand_id", "index_id", "rank", "dist")
-
-
 # knn_join_range caches two intermediates per call. ``cnd`` is dropped as
 # soon as round 1 is materialized, but ``r1`` must outlive the RETURNED lazy
 # DataFrame (its `done` branch reads r1), so it cannot be unpersisted inside
@@ -704,7 +545,6 @@ def knn_join_range(
     features_col: str = "features",
     round_dists: int | None = 3,
     slice_rows: int = 100_000,
-    halo_slices: int | None = None,
 ) -> DataFrame:
     """Exact distributed kNN via equi-depth dim-0 range slices — the
     beyond-broadcast scale path (round 4; replaced a pair-exploding
@@ -735,7 +575,7 @@ def knn_join_range(
     At 10^9 index rows: ~10^4 boundary doubles broadcast, slices of
     ``slice_rows`` rows (a few MB of Arrow per task), two candidate
     shuffles, zero driver collects. Deterministic (dist, index_id) tie
-    order everywhere — identical rows to the other strategies.
+    order everywhere — identical rows to the broadcast strategy.
     """
     spark = cands.sparkSession
     while _RANGE_PREV_PERSISTS:
@@ -789,12 +629,9 @@ def knn_join_range(
     # (JVM integer explode, 2W+1× duplication), sized so the typical
     # half-interval fits inside the halo; queries never leave their slice
     # and the crosser fallback only sees the kth-distance tail.
-    if halo_slices is None:
-        half_interval = (k ** (1.0 / 3.0)) * (n_index ** (2.0 / 3.0))
-        rows_per_slice = max(1.0, n_index / n_slices)
-        W = int(min(max(np.ceil(half_interval / rows_per_slice), 1), 8, n_slices - 1))
-    else:
-        W = int(min(max(halo_slices, 0), n_slices - 1))
+    half_interval = (k ** (1.0 / 3.0)) * (n_index ** (2.0 / 3.0))
+    rows_per_slice = max(1.0, n_index / n_slices)
+    W = int(min(max(np.ceil(half_interval / rows_per_slice), 1), 8, n_slices - 1))
 
     idx = (
         index.select(
@@ -1079,25 +916,19 @@ def knn_join(
     id_col: str = "obj_id",
     features_col: str = "features",
     strategy: str = "auto",
-    grid_width: float | None = None,
     round_dists: int | None = 3,
-    conf: EngineConf = DEFAULT_CONF,
 ) -> DataFrame:
     """Strategy dispatch: ``"auto"`` picks broadcast when the index has
-    at most ``conf.broadcast_index_max_rows`` rows, range-sliced local
+    at most ``_BROADCAST_INDEX_MAX_ROWS`` rows, range-sliced local
     kernels otherwise (mirrors Catalyst's broadcast-vs-shuffle join
     choice, but for the similarity join Catalyst can't plan). Range is
     the beyond-broadcast scale path — measured 5× FASTER than broadcast
     at the 2M-row crossover (15.5 s vs 76.9 s, 50k queries, BENCH.md
     round 4; broadcast pays a driver collect of the whole index) and
-    flat 2M→4M. ``"grid"`` runs the JVM-only ring-expansion variant
-    (``grid_width`` defaults to a sampled kth-NN distance). Any other
-    value raises ``ValueError``."""
+    flat 2M→4M. Any other value raises ``ValueError``."""
     if strategy == "auto":
         n_index = index.count()
-        strategy = (
-            "broadcast" if n_index <= conf.broadcast_index_max_rows else "range"
-        )
+        strategy = "broadcast" if n_index <= _BROADCAST_INDEX_MAX_ROWS else "range"
     if strategy == "broadcast":
         return knn_join_broadcast(
             cands, index, k, id_col, features_col, round_dists=round_dists
@@ -1106,46 +937,7 @@ def knn_join(
         return knn_join_range(
             cands, index, k, id_col, features_col, round_dists=round_dists
         )
-    if strategy == "grid":
-        if grid_width is None:
-            grid_width = estimate_grid_width(cands, index, k, features_col)
-        return knn_join_grid(
-            cands,
-            index,
-            k,
-            grid_width,
-            id_col,
-            features_col,
-            round_dists=round_dists,
-            conf=conf,
-        )
     raise ValueError(
         f"unknown knn strategy {strategy!r}; "
-        "expected 'auto', 'broadcast', 'range' or 'grid'"
+        "expected 'auto', 'broadcast' or 'range'"
     )
-
-
-def estimate_grid_width(
-    cands: DataFrame, index: DataFrame, k: int, features_col: str, sample: int = 256
-) -> float:
-    """Heuristic cell width ≈ expected kth-NN distance, from a small exact
-    sample probe (driver-side; sample × sample numpy)."""
-    c = np.array(
-        [r[0] for r in cands.select(features_col).limit(sample).collect()],
-        dtype=np.float64,
-    )
-    i = np.array(
-        [r[0] for r in index.select(features_col).limit(sample * 4).collect()],
-        dtype=np.float64,
-    )
-    if c.ndim == 1:
-        c, i = c[:, None], i[:, None]
-    d = np.sqrt(
-        np.maximum(
-            (c * c).sum(1)[:, None] - 2 * c @ i.T + (i * i).sum(1)[None, :], 0.0
-        )
-    )
-    kth = np.sort(d, axis=1)[:, min(k, d.shape[1]) - 1]
-    # scale up: the sampled index is sparser than the full one, so this
-    # over-estimates the true kth distance → wider cells → fewer rounds
-    return float(np.median(kth)) or 1.0

@@ -32,7 +32,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONF, EngineConf
 from ..operators.blocking import run_bkafi_blocking
 from ..operators.contrastive import image_embeddings, pair_diff_features
 from ..operators.extract import extract_objects
@@ -138,7 +137,6 @@ def run_contrastive_matching(
     n_neg: int = 2,
     seed: int = 1,
     embed_seed: int = 7,
-    conf: EngineConf = DEFAULT_CONF,
     train_cap: int = 60_000,
     hidden: tuple[int, int] = (32, 16),
     max_iter: int = 300,
@@ -152,7 +150,7 @@ def run_contrastive_matching(
     pages = pages.persist()
     props = pages_to_properties(pages, zoom=15, log1p=True)
     blocking = run_bkafi_blocking(
-        props, dims=[3], k_list=(n_neg + 1,), nn_param=n_neg + 1, conf=conf
+        props, dims=[3], k_list=(n_neg + 1,), nn_param=n_neg + 1
     )
     matched = (
         props.filter(F.col("source") == "cands")

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONF, OBJECT_PROPERTIES, EngineConf
+from ..config import OBJECT_PROPERTIES
 from ..operators.blocking import run_bkafi_blocking
 from ..operators.matching import pair_features, precision_recall_f1
 from ..operators.matching_model import (
@@ -101,7 +101,6 @@ def run_matching_quality(
     seed: int = 1,
     cv: int = 3,
     param_grids: dict | None = None,
-    conf: EngineConf = DEFAULT_CONF,
     train_cap: int = 60_000,
 ) -> pd.DataFrame:
     """Full §3.2 lifecycle; returns one row per backbone:
@@ -117,8 +116,7 @@ def run_matching_quality(
     evaluation stays fully distributed."""
     properties = properties.persist()
     blocking = run_bkafi_blocking(
-        properties, dims=[bkafi_dim], k_list=(n_neg + 1,), nn_param=n_neg + 1,
-        conf=conf,
+        properties, dims=[bkafi_dim], k_list=(n_neg + 1,), nn_param=n_neg + 1
     )
     matched = (
         properties.filter(F.col("source") == "cands")

@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DEFAULT_CONF, EngineConf, NN_PARAM
+from ..config import NN_PARAM
 from ..operators.blocking import bkafi_feature_order, bkafi_vectors
 from ..operators.extract import extract_objects
 from ..operators.knn import knn_join
@@ -44,7 +44,6 @@ def run_pipeline(
     decision_percentile: float = 0.95,
     zoom: int = 15,
     checkpoints: CheckpointManager | None = None,
-    conf: EngineConf = DEFAULT_CONF,
     with_features: bool = True,
 ) -> dict:
     """Returns {'objects', 'properties', 'candidates', 'matches',
@@ -113,7 +112,7 @@ def run_pipeline(
     def job_candidates():
         df = stage(
             "candidates",
-            lambda: knn_join(cands_v, index_v, k, strategy="auto", conf=conf),
+            lambda: knn_join(cands_v, index_v, k, strategy="auto"),
             params={"dim": bkafi_dim, "k": k},
         ).persist()
         df.count()  # materialize inside the thread — that's the overlap

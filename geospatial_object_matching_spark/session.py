@@ -61,10 +61,7 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(conf.shuffle_partitions))
         # Arrow transfer for every pandas UDF / mapInPandas kernel.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(conf.arrow_batch_rows),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         # deterministic timestamps regardless of host zone
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -11,8 +11,9 @@ with sorted buckets, the Sort) simply disappears — the join is co-located
 by construction.  ``tests/test_bucketed.py`` asserts the plan property:
 two bucketed tables joined on their bucket key produce NO Exchange.
 
-This is the table-layout analog of what ``knn_join_grid``/``pip_join`` do
-inside a query (pre-partitioning by cell); here it persists across jobs.
+This is the table-layout analog of what ``knn_join_range``/``pip_join`` do
+inside a query (pre-partitioning by slice or cell); here it persists across
+jobs.
 Bucket counts should match downstream ``shuffle_partitions`` (or divide
 it) so AQE does not re-plan the bucketed side.
 """

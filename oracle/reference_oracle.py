@@ -90,12 +90,27 @@ def mesh_area(mesh) -> float:
 
 
 def mesh_volume(mesh) -> float:
-    """Signed fan tetra sum, abs (object_properties.py:203-215)."""
+    """Signed fan tetra sum, abs (object_properties.py:203-215).
+
+    The reference's ``np.dot(t0, np.cross(t1, t2))`` is written out as
+    scalar products. The fan sum cancels heavily (vertices near 1e6,
+    volumes near 1e2): every float evaluation is ~1e-7 relative off the
+    exact volume, and the order of each term's three products alone moves
+    the result by more than the 1e-9 test tolerance. ``np.dot`` leaves
+    that order to the BLAS kernel the host CPU selects (OpenBLAS's
+    Haswell ``ddot`` sums (x + y) + z, its SkylakeX one differs again), so
+    the order is fixed here: (x + z) + y, the order of numpy's ``einsum``,
+    which the engine's kernel uses."""
     volume = 0.0
     for polygon in mesh:
         for i in range(1, len(polygon) - 1):
-            t0, t1, t2 = polygon[0], polygon[i], polygon[i + 1]
-            volume += np.dot(t0, np.cross(t1, t2)) / 6.0
+            (ax, ay, az), (bx, by, bz), (cx, cy, cz) = (
+                polygon[0], polygon[i], polygon[i + 1]
+            )
+            triple = (
+                ax * (by * cz - bz * cy) + az * (bx * cy - by * cx)
+            ) + ay * (bz * cx - bx * cz)
+            volume += triple / 6.0
     return abs(volume)
 
 
@@ -257,7 +272,11 @@ def hull_3d_volume(points) -> float:
             u = di[j]
             # normals of all triples (i,j,k) at once; sides of all points
             nrm = np.cross(np.broadcast_to(u, di.shape), di)  # (m,3)
-            sides = di @ nrm.T  # (m points, m triples)
+            # (m points, m triples). A BLAS matmul, so its last bits vary
+            # with the host's kernel; GUARD bounds the error of any
+            # summation order, and every candidate is re-checked exactly
+            # below, so the volume does not depend on those bits
+            sides = di @ nrm.T
             smax = sides.max(axis=0)
             smin = sides.min(axis=0)
             cand = np.nonzero((smax <= GUARD) | (smin >= -GUARD))[0]
@@ -352,7 +371,12 @@ def properties_of_object(rec, log1p: bool = True) -> dict[str, float]:
 
     cov = np.cov(vertices, rowvar=False)
     eigenvalues, eigenvectors = np.linalg.eigh(cov)
-    aligned = vertices @ eigenvectors
+    # projection in x, y, z order, not a BLAS matmul (see mesh_volume)
+    aligned = (
+        vertices[:, 0, None] * eigenvectors[0]
+        + vertices[:, 1, None] * eigenvectors[1]
+        + vertices[:, 2, None] * eigenvectors[2]
+    )
     ext = aligned.max(axis=0) - aligned.min(axis=0)
 
     props = {

@@ -6,7 +6,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from geospatial_object_matching_spark.config import EngineConf
 from geospatial_object_matching_spark.operators.blocking import (
     bkafi_feature_order,
     bkafi_vectors,
@@ -15,10 +14,10 @@ from geospatial_object_matching_spark.operators.blocking import (
     run_bkafi_blocking,
 )
 from geospatial_object_matching_spark.operators.extract import extract_objects
+from geospatial_object_matching_spark.operators import knn
 from geospatial_object_matching_spark.operators.knn import (
     knn_join,
     knn_join_broadcast,
-    knn_join_grid,
 )
 from geospatial_object_matching_spark.operators.properties import compute_properties
 from geospatial_object_matching_spark.sources.pages import (
@@ -216,20 +215,31 @@ class TestBlocking:
         )
         assert sdr_pairs != plain_pairs
 
-    def test_grid_strategy_equals_broadcast(self, properties):
+    def test_auto_dispatches_range_above_broadcast_cap(
+        self, properties, monkeypatch
+    ):
+        """``strategy="auto"`` takes the range arm once the index has more
+        rows than the broadcast cap, and its rows equal broadcast's."""
         order = bkafi_feature_order(properties)
         cands, index = bkafi_vectors(properties, order[:3])
         cands, index = cands.persist(), index.persist()
+        assert index.count() > 8
+        calls = []
+
+        def spy(*args, **kwargs):
+            calls.append(kwargs)
+            return range_join(*args, **kwargs)
+
+        range_join = knn.knn_join_range
+        monkeypatch.setattr(knn, "knn_join_range", spy)
+        monkeypatch.setattr(knn, "_BROADCAST_INDEX_MAX_ROWS", 8)
+        a = knn_join(cands, index, 10, strategy="auto").toPandas()
+        assert len(calls) == 1
         b = knn_join_broadcast(cands, index, 10).toPandas()
-        conf = EngineConf(knn_max_rounds=4)
-        g = knn_join_grid(cands, index, 10, grid_width=0.5, conf=conf).toPandas()
         key = ["cand_id", "rank"]
+        a = a.sort_values(key).reset_index(drop=True)
         b = b.sort_values(key).reset_index(drop=True)
-        g = g.sort_values(key).reset_index(drop=True)
-        pd.testing.assert_frame_equal(
-            b[["cand_id", "index_id", "rank"]], g[["cand_id", "index_id", "rank"]]
-        )
-        np.testing.assert_allclose(b["dist"], g["dist"], atol=1e-9)
+        pd.testing.assert_frame_equal(a, b)
 
     def test_range_strategy_equals_broadcast(self, properties):
         from geospatial_object_matching_spark.operators.knn import knn_join_range
@@ -344,10 +354,6 @@ class TestBlocking:
             knn_join_range(
                 cand, idx, k, slice_rows=4, round_dists=None
             ).toPandas(),
-            # the JVM strategies must land the same NaN tail: Spark sorts
-            # NaN LAST in ascending ORDER BY, matching the kernel's
-            # (dist, id) lexsort
-            knn_join_grid(cand, idx, k, 0.3, round_dists=None).toPandas(),
         ):
             got = got.sort_values(["cand_id", "rank"]).reset_index(drop=True)
             pd.testing.assert_frame_equal(
@@ -451,12 +457,12 @@ class TestBlocking:
                 np.testing.assert_array_equal(got_d, want_d)
 
     def test_unknown_strategy_raises(self, spark):
-        """An unknown strategy name is an error, not a silent fallback
-        to the grid strategy."""
+        """An unknown strategy name is an error, not a silent fallback;
+        ``grid`` is a deleted strategy and is unknown too."""
         df = spark.createDataFrame(
             [("a", [0.0, 1.0])], "obj_id string, features array<double>"
         )
-        for bad in ("equidepth", "brodcast", ""):
+        for bad in ("grid", "equidepth", "brodcast", ""):
             with pytest.raises(ValueError, match="unknown knn strategy"):
                 knn_join(df, df, 1, strategy=bad)
 

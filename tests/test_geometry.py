@@ -1,6 +1,12 @@
 """Engine geometry kernels vs closed-form shapes and the independent
 numpy oracle (SURVEY.md §5 layer 1)."""
 
+import os
+import pathlib
+import signal
+import subprocess
+import sys
+
 import numpy as np
 import pytest
 
@@ -125,6 +131,25 @@ class TestPropertiesVsOracle:
         for obj_type in ("cands", "index"):
             for rec in fixture_objects[obj_type].values():
                 assert 10 <= len(rec["mesh"]) <= 30
+
+
+@pytest.mark.parametrize("coretype", ["Prescott", "Haswell", "SkylakeX"])
+def test_oracle_agrees_under_each_blas_kernel(coretype):
+    """``TestPropertiesVsOracle`` passes whichever OpenBLAS kernel the host
+    would pick: the oracle's cancellation-heavy sums must not go through
+    BLAS, whose summation order differs between kernels."""
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    env = dict(os.environ, OPENBLAS_CORETYPE=coretype)
+    run = subprocess.run(
+        [
+            sys.executable, "-m", "pytest", "-q", "-p", "no:cacheprovider",
+            "tests/test_geometry.py::TestPropertiesVsOracle",
+        ],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600,
+    )
+    if run.returncode == -signal.SIGILL:
+        pytest.skip(f"this CPU cannot run the {coretype} kernel")
+    assert run.returncode == 0, run.stdout[-4000:] + run.stderr[-2000:]
 
 
 class TestRound3Exactness:

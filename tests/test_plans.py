@@ -2,7 +2,6 @@
 visible in the plan, not assumed (SURVEY.md §4)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def plan_of(df) -> str:
@@ -110,48 +109,3 @@ class TestAggregation:
         )
         assert "WholeStageCodegen" in s
 
-
-class TestKnnGridPlan:
-    def test_grid_join_is_hash_join_jvm_distance(self, spark):
-        """The grid kNN round join must be a shuffled/broadcast hash join
-        on cell coordinates with the distance as a JVM expression."""
-        from geospatial_object_matching_spark.operators.blocking import (
-            bkafi_feature_order,
-            bkafi_vectors,
-        )
-        from geospatial_object_matching_spark.operators.extract import (
-            extract_objects,
-        )
-        from geospatial_object_matching_spark.operators.properties import (
-            compute_properties,
-        )
-        from geospatial_object_matching_spark.sources.pages import (
-            generate_pages_df,
-        )
-        from geospatial_object_matching_spark.operators.knn import (
-            _dist_expr,
-            _grid_coord_cols,
-        )
-
-        props = compute_properties(
-            extract_objects(generate_pages_df(spark, 20, seed=1))
-        ).persist()
-        order = bkafi_feature_order(props)
-        cands, index = bkafi_vectors(props, order[:2])
-        cg = _grid_coord_cols(
-            cands.select("obj_id", F.col("features").alias("_fc")), "_fc", 0.5, 2
-        )
-        ig = _grid_coord_cols(
-            index.select(
-                F.col("obj_id").alias("index_id"), F.col("features").alias("_fi")
-            ),
-            "_fi",
-            0.5,
-            2,
-        )
-        joined = cg.join(
-            ig, [cg["_g0"] == ig["_g0"], cg["_g1"] == ig["_g1"]]
-        ).select(_dist_expr("_fc", "_fi").alias("dist"))
-        plan = plan_of(joined)
-        assert "HashJoin" in plan or "SortMergeJoin" in plan
-        assert "BatchEvalPython" not in plan
