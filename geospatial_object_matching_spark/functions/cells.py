@@ -63,22 +63,6 @@ def lonlat_to_cell(lon, lat, zoom: int) -> np.ndarray:
     return pack_cell(x, y, zoom)
 
 
-def neighbor_ring_cells(cell_id: int, ring: int = 1) -> list[int]:
-    """All cells within Chebyshev distance ``ring`` (incl. self), clamped to
-    the grid."""
-    x, y, zoom = unpack_cell(np.asarray([cell_id]))
-    x, y, zoom = int(x[0]), int(y[0]), int(zoom[0])
-    n = 1 << zoom
-    out = []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            nx, ny = x + dx, y + dy
-            if 0 <= ny < n:
-                nx %= n  # wrap longitude
-                out.append(int(pack_cell(np.int64(nx), np.int64(ny), zoom)))
-    return out
-
-
 def tile_bounds(x: int, y: int, zoom: int):
     """(lon_min, lat_min, lon_max, lat_max) of a tile (degrees)."""
     n = float(2**zoom)

@@ -917,6 +917,7 @@ def knn_join(
     features_col: str = "features",
     strategy: str = "auto",
     round_dists: int | None = 3,
+    n_index: int | None = None,
 ) -> DataFrame:
     """Strategy dispatch: ``"auto"`` picks broadcast when the index has
     at most ``_BROADCAST_INDEX_MAX_ROWS`` rows, range-sliced local
@@ -925,9 +926,15 @@ def knn_join(
     the beyond-broadcast scale path — measured 5× FASTER than broadcast
     at the 2M-row crossover (15.5 s vs 76.9 s, 50k queries, BENCH.md
     round 4; broadcast pays a driver collect of the whole index) and
-    flat 2M→4M. Any other value raises ``ValueError``."""
+    flat 2M→4M. Any other value raises ``ValueError``.
+
+    ``n_index`` is the index row count when the caller already has it
+    (the pipeline's phase-A side counts); ``"auto"`` then dispatches on
+    it instead of running its own ``index.count()`` job. It only picks
+    the arm: both return identical rows."""
     if strategy == "auto":
-        n_index = index.count()
+        if n_index is None:
+            n_index = index.count()
         strategy = "broadcast" if n_index <= _BROADCAST_INDEX_MAX_ROWS else "range"
     if strategy == "broadcast":
         return knn_join_broadcast(

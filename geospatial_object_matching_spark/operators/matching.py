@@ -32,13 +32,13 @@ from .scaler import robust_scaler_fit, robust_scaler_transform
 
 
 def split_sides(properties: DataFrame) -> tuple[DataFrame, DataFrame]:
-    cands = properties.filter(F.col("source") == "cands").select(
-        F.col("obj_id").alias("cand_id"),
-        *[F.col(p).alias(f"c_{p}") for p in OBJECT_PROPERTIES],
+    # one selectExpr per side: SQL strings cross py4j once, where
+    # per-column Column objects cost a round trip each
+    cands = properties.filter(F.col("source") == "cands").selectExpr(
+        "obj_id AS cand_id", *[f"{p} AS c_{p}" for p in OBJECT_PROPERTIES]
     )
-    index = properties.filter(F.col("source") == "index").select(
-        F.col("obj_id").alias("index_id"),
-        *[F.col(p).alias(f"i_{p}") for p in OBJECT_PROPERTIES],
+    index = properties.filter(F.col("source") == "index").selectExpr(
+        "obj_id AS index_id", *[f"{p} AS i_{p}" for p in OBJECT_PROPERTIES]
     )
     return cands, index
 
@@ -67,11 +67,15 @@ def matched_wide(properties: DataFrame, features: list[str]) -> DataFrame:
     )
 
 
-def ratio_expr(c, i, max_ratio: float = MAX_RATIO_VAL):
+def ratio_sql(c: str, i: str, max_ratio: float = MAX_RATIO_VAL) -> str:
     """min(1000, round(c/i,3)); i==0 → 1000 (numpy c/0→inf→clip;
-    0/0→nan→min(1000,nan)=1000 in the reference's python min)."""
-    return F.when(i == 0.0, F.lit(max_ratio)).otherwise(
-        F.least(F.lit(max_ratio), F.round(c / i, 3))
+    0/0→nan→min(1000,nan)=1000 in the reference's python min), as a SQL
+    expression over column names. The literals are cast to DOUBLE: a bare
+    ``1000.0`` parses as a DECIMAL."""
+    m = f"CAST({float(max_ratio)!r} AS DOUBLE)"
+    return (
+        f"CASE WHEN {i} = CAST(0.0 AS DOUBLE) THEN {m} "
+        f"ELSE least({m}, round({c} / {i}, 3)) END"
     )
 
 
@@ -86,19 +90,19 @@ def pair_features(
     ``{prop}_index`` raw columns (process_pairs.py:30-40)."""
     cands, index = split_sides(properties)
     joined = pairs.join(cands, "cand_id").join(index, "index_id")
-    keep = [c for c in pairs.columns]
+    keep = [f"`{c}`" for c in pairs.columns]
     if operator == "division":
         feats = [
-            ratio_expr(F.col(f"c_{p}"), F.col(f"i_{p}")).alias(f"{p}_ratio")
+            f"{ratio_sql(f'c_{p}', f'i_{p}')} AS {p}_ratio"
             for p in OBJECT_PROPERTIES
         ]
     elif operator == "concatenation":
-        feats = [F.col(f"c_{p}").alias(f"{p}_cand") for p in OBJECT_PROPERTIES] + [
-            F.col(f"i_{p}").alias(f"{p}_index") for p in OBJECT_PROPERTIES
+        feats = [f"c_{p} AS {p}_cand" for p in OBJECT_PROPERTIES] + [
+            f"i_{p} AS {p}_index" for p in OBJECT_PROPERTIES
         ]
     else:
         raise ValueError(f"operator {operator} is not supported")
-    return joined.select(*keep, *feats)
+    return joined.selectExpr(*keep, *feats)
 
 
 def label_pairs(pairs: DataFrame) -> DataFrame:
@@ -114,7 +118,7 @@ def label_pairs(pairs: DataFrame) -> DataFrame:
 
 
 def matched_pair_vectors(
-    properties: DataFrame, features: list[str]
+    properties: DataFrame, features: list[str], n_rows: int | None = None
 ) -> tuple[DataFrame, dict]:
     """Matched (id ∈ both sides) scaled feature pairs; scaler fit on the
     matched cands only (bkafi_with_threshold.py:176-182).
@@ -122,9 +126,10 @@ def matched_pair_vectors(
     Plan: ONE groupBy produces the matched wide table (the round-1 shape
     was intersect + two joins — 3 shuffles and 3 sequential driver jobs);
     the scaler fit aggregates the c_* columns of that table; the distance
-    is pure column arithmetic."""
+    is pure column arithmetic. ``n_rows`` (the matched-id count, when the
+    caller has it) picks the scaler fit's one-job percentile arm."""
     wide = matched_wide(properties, features).persist()
-    stats_c = robust_scaler_fit(wide, [f"c_{f}" for f in features])
+    stats_c = robust_scaler_fit(wide, [f"c_{f}" for f in features], n_rows)
     stats = {f: stats_c[f"c_{f}"] for f in features}
     dist = F.sqrt(
         sum(
@@ -146,14 +151,16 @@ def percentile_thresholds(
     dists: DataFrame,
     percentiles: tuple[float, ...] = THRESHOLD_PERCENTILES,
     col: str = "dist",
+    n_rows: int | None = None,
 ) -> dict[float, float]:
     """Exact linear-interpolated percentiles (np.percentile semantics,
     bkafi_with_threshold.py:131-134), computed distributively — see
     operators/scaler.py::exact_percentiles (the single-reducer exact
-    ``percentile`` aggregate is a serial scale-killer)."""
+    ``percentile`` aggregate is a serial scale-killer); ``n_rows`` is
+    its arm-choosing row hint."""
     from .scaler import exact_percentiles
 
-    qs = exact_percentiles(dists, [col], list(percentiles))[col]
+    qs = exact_percentiles(dists, [col], list(percentiles), n_rows=n_rows)[col]
     return {p: float(v) for p, v in zip(percentiles, qs)}
 
 

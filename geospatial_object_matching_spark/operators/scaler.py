@@ -15,6 +15,12 @@ counts rows below each bracket and collects only the few-thousand-row
 interior; the driver picks the true order statistics from the interior
 and interpolates with Spark's exact formula. All distributed work is
 scans + partial aggs; driver state is O(cols × probs × n/accuracy).
+
+When the caller already knows the row count (``n_rows``, e.g. from the
+pipeline's phase-A side counts) and ``n_rows × cols`` fits the same
+``interior_cap`` that bounds the 3-pass interior, the columns are
+collected in ONE job and ranked on the driver with the same arithmetic —
+one Spark job instead of three on the critical path.
 """
 
 from __future__ import annotations
@@ -89,13 +95,14 @@ def exact_percentiles(
     probs: list[float],
     accuracy: int = 2000,
     interior_cap: int = 262_144,
+    n_rows: int | None = None,
 ) -> dict[str, list[float]]:
     """Exact ``percentile(col, probs)`` per column, distributively.
 
     Bit-identical to ``F.percentile`` (verified against it in
-    tests/test_plans.py::test_exact_percentiles_bit_parity) including NaN
-    placement (sorted last, Spark/Java double ordering) and the exact
-    interpolation arithmetic. Falls back to the single-reducer aggregate
+    tests/test_scaler_percentiles.py::test_exact_percentiles_bit_parity)
+    including NaN placement (sorted last, Spark/Java double ordering) and
+    the exact interpolation arithmetic. Falls back to the single-reducer aggregate
     if a bracket invariant fails (never observed; pure safety net).
 
     Driver state is O(cols × probs × n/accuracy) UNCONDITIONALLY
@@ -105,8 +112,16 @@ def exact_percentiles(
     itself is ~4·n/accuracy) is aggregated as (value, count) runs with a
     zero-sign subkey instead of raw rows, so a constant column costs one
     run, not one row per duplicate.
+
+    ``n_rows`` is a row-count hint that only chooses the arm: when
+    ``n_rows × len(cols) <= interior_cap`` the columns are collected in
+    one job and ranked on the driver (:func:`_collected_percentiles`),
+    keeping the same driver-state bound. That arm counts what it
+    actually collects, so a wrong hint still yields exact results.
     """
     probs = [float(p) for p in probs]
+    if n_rows is not None and n_rows * len(cols) <= interior_cap:
+        return _collected_percentiles(df, cols, probs)
     eps = 1.0 / accuracy
     bprobs = sorted(
         {min(max(q, 0.0), 1.0) for p in probs for q in (p - 2 * eps, p + 2 * eps)}
@@ -280,9 +295,37 @@ def exact_percentiles(
     return out
 
 
-def robust_scaler_fit(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, float]]:
-    """{col: (center, scale)} from exact percentiles over ``df``."""
-    qs = exact_percentiles(df, cols, [0.25, 0.5, 0.75])
+def _collected_percentiles(
+    df: DataFrame, cols: list[str], probs: list[float]
+) -> dict[str, list[float] | None]:
+    """One-job arm of :func:`exact_percentiles`: collect the columns and
+    run Spark's ``percentile`` arithmetic with the whole column as the
+    interior (no rows below it; NaN ranks last, -0.0 below 0.0).
+
+    Rows, not Arrow/pandas: pandas would turn the nulls Spark's
+    percentile skips into NaNs it ranks last."""
+    rows = df.select(*cols).collect()
+    out: dict[str, list[float] | None] = {}
+    for i, c in enumerate(cols):
+        vals = [r[i] for r in rows if r[i] is not None]
+        if not vals:
+            out[c] = None  # Spark's percentile returns null on empty input
+            continue
+        finite = [v for v in vals if not math.isnan(v)]
+        interior = _sorted_total_order(finite)
+        out[c] = [
+            _percentile_from_interior(interior, 0, len(vals), len(finite), p)
+            for p in probs
+        ]
+    return out
+
+
+def robust_scaler_fit(
+    df: DataFrame, cols: list[str], n_rows: int | None = None
+) -> dict[str, tuple[float, float]]:
+    """{col: (center, scale)} from exact percentiles over ``df``;
+    ``n_rows`` is :func:`exact_percentiles`' arm-choosing row hint."""
+    qs = exact_percentiles(df, cols, [0.25, 0.5, 0.75], n_rows=n_rows)
     out = {}
     for c in cols:
         q1, med, q3 = qs[c]
@@ -294,10 +337,11 @@ def robust_scaler_fit(df: DataFrame, cols: list[str]) -> dict[str, tuple[float, 
 def robust_scaler_transform(
     df: DataFrame, stats: dict[str, tuple[float, float]], suffix: str = ""
 ) -> DataFrame:
-    """Apply (x - center) / scale as column expressions (JVM-side)."""
-    out = df
-    for c, (center, scale) in stats.items():
-        out = out.withColumn(
-            f"{c}{suffix}", (F.col(c) - F.lit(center)) / F.lit(scale)
-        )
-    return out
+    """Apply (x - center) / scale as column expressions (JVM-side), in
+    one projection."""
+    return df.withColumns(
+        {
+            f"{c}{suffix}": (F.col(c) - F.lit(center)) / F.lit(scale)
+            for c, (center, scale) in stats.items()
+        }
+    )

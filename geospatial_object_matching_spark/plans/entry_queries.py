@@ -23,7 +23,7 @@ from ..operators import dedup as DD
 from ..operators import similarity as SIM
 from ..operators.extract import extract_objects
 from ..operators.knn import knn_join_broadcast
-from ..operators.matching import ratio_expr
+from ..operators.matching import ratio_sql
 from ..operators.properties import compute_properties
 from ..operators.sampling import sample_ids_fraction
 from ..operators.blocking import (
@@ -178,7 +178,7 @@ def q_ratio_feature(spark, sf_dir):
     return j.select(
         "o_orderkey",
         "o_custkey",
-        ratio_expr(F.col("o_totalprice"), F.col("c_acctbal")).alias("price_ratio"),
+        F.expr(ratio_sql("o_totalprice", "c_acctbal")).alias("price_ratio"),
     )
 
 

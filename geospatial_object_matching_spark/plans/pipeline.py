@@ -69,11 +69,16 @@ def run_pipeline(
     # term once the kernels are fast (BENCH.md Amdahl note), so every
     # mutually independent job chain runs from a driver thread:
     #   phase A — feature order (ratio-stats agg) ∥ side counts (needs
-    #   only properties); the scaler fit runs AFTER the order resolves,
-    #   on exactly the selected bkafi_dim features — fitting all 25
-    #   up-front for overlap cost 12.7 s of exact-percentile work at sf1
-    #   vs ~2 s for the 3 needed columns (round-6 measurement), and the
-    #   extra parallel work competed with the featurize stage for cores;
+    #   only properties). Both resolve before phase A ends, and the
+    #   counts feed three consumers after it: n_c sizes the cands scaler
+    #   fit, n_int the matched-cands fit and the threshold percentiles
+    #   (each picks exact_percentiles' one-job arm when it fits the
+    #   interior cap), and n_i replaces knn_join's own index count.
+    #   The scaler fit runs AFTER the order resolves, on exactly the
+    #   selected bkafi_dim features — fitting all 25 up-front for overlap
+    #   cost 12.7 s of exact-percentile work at sf1 vs ~2 s for the 3
+    #   needed columns (round-6 measurement), and the extra parallel work
+    #   competed with the featurize stage for cores;
     #   phase B — kNN ∥ matched-pair threshold percentiles.
     from concurrent.futures import ThreadPoolExecutor
 
@@ -98,12 +103,13 @@ def run_pipeline(
         f_order = pool.submit(bkafi_feature_order, properties, "std")
         f_cnt = pool.submit(job_counts)
         order = f_order.result()
+        n_c, n_i, n_int = f_cnt.result()
     feats = order[:bkafi_dim]
     # per-feature stats are independent, so fitting exactly the selected
     # columns yields the identical (center, scale) values the 25-column
     # fit produced for them
     scaler_stats = robust_scaler_fit(
-        properties.filter(F.col("source") == "cands"), feats
+        properties.filter(F.col("source") == "cands"), feats, n_rows=n_c
     )
 
     cands_v, index_v = bkafi_vectors(properties, feats, stats=scaler_stats)
@@ -112,7 +118,7 @@ def run_pipeline(
     def job_candidates():
         df = stage(
             "candidates",
-            lambda: knn_join(cands_v, index_v, k, strategy="auto"),
+            lambda: knn_join(cands_v, index_v, k, strategy="auto", n_index=n_i),
             params={"dim": bkafi_dim, "k": k},
         ).persist()
         df.count()  # materialize inside the thread — that's the overlap
@@ -120,15 +126,16 @@ def run_pipeline(
 
     def job_thresholds():
         # threshold matcher (bkafi_with_threshold.py lifecycle)
-        dists, _ = matched_pair_vectors(properties, feats)
-        return percentile_thresholds(dists, (0.5, 0.75, 0.9, 0.95, 0.99))
+        dists, _ = matched_pair_vectors(properties, feats, n_rows=n_int)
+        return percentile_thresholds(
+            dists, (0.5, 0.75, 0.9, 0.95, 0.99), n_rows=n_int
+        )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_cand = pool.submit(job_candidates)
         f_thr = pool.submit(job_thresholds)
         thresholds = f_thr.result()
         candidates = f_cand.result()
-    n_c, n_i, n_int = f_cnt.result()
 
     thr = thresholds[decision_percentile]
     matches = candidates.filter(F.col("dist") <= F.lit(thr)).withColumn(

@@ -14,6 +14,7 @@ def spark():
     from geospatial_object_matching_spark.session import get_spark
 
     conf = EngineConf(shuffle_partitions=8)
-    spark = get_spark("gom-tests", master="local[8]", conf=conf)
+    cores = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
+    spark = get_spark("gom-tests", master=f"local[{cores}]", conf=conf)
     yield spark
     spark.stop()

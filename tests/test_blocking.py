@@ -241,6 +241,54 @@ class TestBlocking:
         b = b.sort_values(key).reset_index(drop=True)
         pd.testing.assert_frame_equal(a, b)
 
+    def test_auto_with_n_index_skips_the_count(self, properties, monkeypatch):
+        """Given ``n_index``, ``strategy="auto"`` dispatches on it without
+        counting the index, and its rows equal broadcast's."""
+        order = bkafi_feature_order(properties)
+        cands, index = bkafi_vectors(properties, order[:3])
+        cands, index = cands.persist(), index.persist()
+        n_index = index.count()
+        want = knn_join_broadcast(cands, index, 10).toPandas()
+
+        def no_count(self):
+            raise AssertionError("knn_join counted the index")
+
+        monkeypatch.setattr(type(index), "count", no_count)
+        got = knn_join(cands, index, 10, strategy="auto", n_index=n_index)
+        got = got.toPandas()
+        key = ["cand_id", "rank"]
+        pd.testing.assert_frame_equal(
+            got.sort_values(key).reset_index(drop=True),
+            want.sort_values(key).reset_index(drop=True),
+        )
+
+    def test_auto_dispatches_range_on_n_index_above_cap(
+        self, properties, monkeypatch
+    ):
+        """``n_index`` above the broadcast cap takes the range arm (the
+        hint alone picks it), and its rows equal broadcast's."""
+        order = bkafi_feature_order(properties)
+        cands, index = bkafi_vectors(properties, order[:3])
+        cands, index = cands.persist(), index.persist()
+        calls = []
+
+        def spy(*args, **kwargs):
+            calls.append(kwargs)
+            return range_join(*args, **kwargs)
+
+        range_join = knn.knn_join_range
+        monkeypatch.setattr(knn, "knn_join_range", spy)
+        a = knn_join(
+            cands, index, 10, strategy="auto",
+            n_index=knn._BROADCAST_INDEX_MAX_ROWS + 1,
+        ).toPandas()
+        assert len(calls) == 1
+        b = knn_join_broadcast(cands, index, 10).toPandas()
+        key = ["cand_id", "rank"]
+        a = a.sort_values(key).reset_index(drop=True)
+        b = b.sort_values(key).reset_index(drop=True)
+        pd.testing.assert_frame_equal(a, b)
+
     def test_range_strategy_equals_broadcast(self, properties):
         from geospatial_object_matching_spark.operators.knn import knn_join_range
 

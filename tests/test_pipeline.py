@@ -75,6 +75,30 @@ class TestPipeline:
         assert got2 == expected
 
 
+#: Spark jobs ``run_pipeline`` starts on 300 generated entities (seeds
+#: 42, 7 and 3 alike): 19 with the phase-A counts feeding the percentile
+#: arms and the kNN dispatch, 39 when each exact percentile took three
+#: passes and ``knn_join`` counted the index again.
+PIPELINE_JOB_BUDGET = 19
+
+
+def test_pipeline_job_budget(spark):
+    """The flagship's serial job chain stays within its budget. Jobs are
+    counted by scheduler job id, not under a job group: the pipeline's
+    thread-pool legs do not inherit the calling thread's group."""
+    sc = spark.sparkContext
+    next_job = sc._jsc.sc().dagScheduler().nextJobId
+    pages = generate_pages_df(spark, 300, seed=42)
+    try:
+        first = next_job()
+        res = run_pipeline(spark, pages)
+        n_jobs = next_job() - first
+    finally:
+        spark.catalog.clearCache()
+    assert res["counts"]["cands"] == 300
+    assert n_jobs <= PIPELINE_JOB_BUDGET, n_jobs
+
+
 class TestStreaming:
     def test_stream_equals_batch(self, spark, tmp_path):
         import pandas as pd

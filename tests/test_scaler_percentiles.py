@@ -11,6 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from geospatial_object_matching_spark.operators import scaler
 from geospatial_object_matching_spark.operators.scaler import (
     exact_percentiles,
     robust_scaler_fit,
@@ -72,9 +73,11 @@ def test_exact_percentiles_bit_parity(spark, name):
     ).repartition(7)
     df = df.persist()
     try:
-        got = exact_percentiles(df, ["x"], PROBS)
         want = spark_reference(spark, df, ["x"], PROBS)
-        assert_bit_equal(got["x"], want["x"], name)
+        # the 3-pass path, then the one-job collected arm (true row count)
+        for n_rows in (None, len(data)):
+            got = exact_percentiles(df, ["x"], PROBS, n_rows=n_rows)
+            assert_bit_equal(got["x"], want["x"], f"{name} n_rows={n_rows}")
     finally:
         df.unpersist()
 
@@ -88,13 +91,19 @@ def test_exact_percentiles_multicol_and_nulls(spark):
                 float(rng.normal()),
                 float(rng.uniform()) if i % 3 else None,
                 float(i % 5),
+                None,
             )
         )
-    df = spark.createDataFrame(rows, "a double, b double, c double").repartition(5)
-    got = exact_percentiles(df, ["a", "b", "c"], PROBS)
-    want = spark_reference(spark, df, ["a", "b", "c"], PROBS)
-    for c in ("a", "b", "c"):
-        assert_bit_equal(got[c], want[c], c)
+    df = spark.createDataFrame(
+        rows, "a double, b double, c double, e double"
+    ).repartition(5)
+    cols = ["a", "b", "c", "e"]
+    want = spark_reference(spark, df, cols, PROBS)
+    assert want["e"] is None  # an all-null column has no percentiles
+    for n_rows in (None, len(rows)):
+        got = exact_percentiles(df, cols, PROBS, n_rows=n_rows)
+        for c in cols:
+            assert_bit_equal(got[c], want[c], f"{c} n_rows={n_rows}")
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
@@ -121,6 +130,65 @@ def test_exact_percentiles_fallback_path(spark):
     got = exact_percentiles(df, ["x"], PROBS, accuracy=4)
     want = spark_reference(spark, df, ["x"], PROBS)
     assert_bit_equal(got["x"], want["x"], "fallback")
+
+
+@pytest.mark.parametrize("hint", [1, 60_000])
+def test_exact_percentiles_wrong_hint_is_still_exact(spark, monkeypatch, hint):
+    # the hint only picks the arm; the arm counts what it collects
+    data = CASES["with_nan"]
+    df = spark.createDataFrame([(float(v),) for v in data], "x double")
+    calls = []
+    collected = scaler._collected_percentiles
+
+    def spy(*args):
+        calls.append(args)
+        return collected(*args)
+
+    monkeypatch.setattr(scaler, "_collected_percentiles", spy)
+    got = exact_percentiles(df, ["x"], PROBS, n_rows=hint)
+    assert len(calls) == 1
+    want = spark_reference(spark, df, ["x"], PROBS)
+    assert_bit_equal(got["x"], want["x"], f"hint={hint}")
+
+
+def test_exact_percentiles_hint_above_cap_takes_three_passes(
+    spark, monkeypatch
+):
+    data = CASES["uniform"]
+    df = spark.createDataFrame(
+        [(float(v), float(-v)) for v in data], "x double, y double"
+    )
+    cap = 10_000
+    calls = []
+    monkeypatch.setattr(
+        scaler, "_collected_percentiles", lambda *a: calls.append(a)
+    )
+    # 5_001 rows × 2 cols > cap: the 3-pass path, whatever the true size
+    got = exact_percentiles(
+        df, ["x", "y"], PROBS, interior_cap=cap, n_rows=cap // 2 + 1
+    )
+    assert calls == []
+    want = spark_reference(spark, df, ["x", "y"], PROBS)
+    for c in ("x", "y"):
+        assert_bit_equal(got[c], want[c], c)
+
+
+def test_exact_percentiles_collected_arm_runs_one_job(spark):
+    sc = spark.sparkContext
+    data = CASES["skewed"]
+    df = spark.createDataFrame(
+        [(float(v), float(v) * 2) for v in data], "x double, y double"
+    ).persist()
+    try:
+        df.count()
+        sc.setJobGroup("pct-one-job", "collected percentile arm")
+        try:
+            exact_percentiles(df, ["x", "y"], PROBS, n_rows=len(data))
+        finally:
+            sc._jsc.clearJobGroup()
+        assert len(sc.statusTracker().getJobIdsForGroup("pct-one-job")) == 1
+    finally:
+        df.unpersist()
 
 
 def test_robust_scaler_fit_matches_numpy(spark):

@@ -9,7 +9,6 @@ from geospatial_object_matching_spark.functions.cells import (
     clip_polygon_to_box,
     lonlat_to_cell,
     lonlat_to_tile,
-    neighbor_ring_cells,
     pack_cell,
     points_in_polygon,
     polygon_area_2d,
@@ -46,13 +45,6 @@ class TestCells:
         px, py, pz = unpack_cell(parent)
         assert (pz == 14).all()
         assert (px == x >> 2).all() and (py == y >> 2).all()
-
-    def test_neighbor_ring(self):
-        cid = int(lonlat_to_cell(np.array([4.3]), np.array([52.07]), 10)[0])
-        ring0 = neighbor_ring_cells(cid, 0)
-        ring1 = neighbor_ring_cells(cid, 1)
-        assert ring0 == [cid]
-        assert len(ring1) == 9 and cid in ring1
 
     def test_tile_bounds_inverse(self):
         x, y = lonlat_to_tile(np.array([4.3]), np.array([52.07]), 12)

@@ -1304,7 +1304,7 @@ def expected_match_decisions(
 
 def expected_pair_features(prop_dict, dim: int = 3, k: int = 5) -> pd.DataFrame:
     """25 ratio features over kNN(k=5) pairs — ratio = min(1000,
-    spark_round(c/i, 3)), i==0 or NaN -> 1000 (engine ratio_expr: Spark
+    spark_round(c/i, 3)), i==0 or NaN -> 1000 (engine ratio_sql: Spark
     least() treats NaN as greatest, python min(1000, nan) keeps 1000)."""
     nn, _ = _bkafi_nn(prop_dict, dim, k)
     rows = []
