@@ -4,9 +4,10 @@ reference blocking.py + classifier.py:224-233 + pipelines.py:369-394).
 Dataflow (all DataFrame transformations):
 
     properties(obj_id, source, p1..p25)
-      ├─ matched inner self-join on obj_id → per-property index/cand ratio
-      │   stats (mean, stddev_pop, rounded 3) → feature order by std asc
-      │   (the reference's 'std' BKAFI criterion, blocking.py:135-138)
+      ├─ one groupBy(obj_id) → per-property index/cand ratio stats over
+      │   matched ids (mean, stddev_pop, rounded 3) → feature order by std
+      │   asc (the reference's 'std' BKAFI criterion, blocking.py:135-138),
+      │   plus the cands / index / intersection id counts in the same job
       ├─ top-dim feature projection (BKAFI dimensionality pruning = column
       │   pruning, blocking.py:126-142)
       ├─ RobustScaler fit on cands → scaled feature vectors (A9)
@@ -33,42 +34,56 @@ from .knn import knn_join
 from .scaler import robust_scaler_fit, robust_scaler_transform
 
 
-def property_ratio_stats(properties: DataFrame) -> list[dict]:
+def property_ratio_stats(
+    properties: DataFrame,
+) -> tuple[list[dict], tuple[int, int, int]]:
     """Per-property index/cand ratio mean & std over matched ids, rounded
     to 3, sorted by std ascending (stable in property order) —
-    classifier.py:224-233 semantics. Returns a 25-row driver-side list."""
-    from .matching import matched_wide
+    classifier.py:224-233 semantics — and the side counts (n_cands,
+    n_index, n_intersection) of distinct obj_ids.
 
-    matched = matched_wide(properties, list(OBJECT_PROPERTIES))
-    aggs = []
-    for p in OBJECT_PROPERTIES:
-        ratio = F.col(f"i_{p}") / F.col(f"c_{p}")
-        aggs.append(F.avg(ratio).alias(f"mean_{p}"))
-        aggs.append(F.stddev_pop(ratio).alias(f"std_{p}"))
-    row = matched.agg(*aggs).first()
+    One groupBy(obj_id) builds the wide table: presence flags ``_c``/``_i``
+    and the 25 ``c_*``/``i_*`` columns (obj_id is unique per source, so
+    max(CASE ...) is exact). One global aggregate over it returns the
+    ratio stats, over the rows whose first property is non-null on both
+    sides, and the three counts, in one ``first()``. Each aggregate is
+    one SQL string, one py4j call; composed Column objects cost one call
+    per node, and this plan is built on the driver's critical path."""
+    props = list(OBJECT_PROPERTIES)
+    sides = (("c", "cands"), ("i", "index"))
+    wide = properties.groupBy("obj_id").agg(
+        *[F.expr(f"max(CAST(source = '{s}' AS INT)) AS _{k}") for k, s in sides],
+        *[
+            F.expr(f"max(CASE WHEN source = '{s}' THEN {p} END) AS {k}_{p}")
+            for p in props
+            for k, s in sides
+        ],
+    )
+    matched = f"c_{props[0]} IS NOT NULL AND i_{props[0]} IS NOT NULL"
+    aggs = ["sum(_c) AS n_c", "sum(_i) AS n_i", "sum(_c * _i) AS n_int"]
+    for p in props:
+        ratio = f"CASE WHEN {matched} THEN i_{p} / c_{p} END"
+        aggs += [f"avg({ratio}) AS mean_{p}", f"stddev_pop({ratio}) AS std_{p}"]
+    row = wide.selectExpr(*aggs).first()
     stats = [
         {
             "property": p,
             "mean": round(float(row[f"mean_{p}"]), 3),
             "std": round(float(row[f"std_{p}"]), 3),
         }
-        for p in OBJECT_PROPERTIES
+        for p in props
     ]
+    counts = (int(row["n_c"]), int(row["n_i"]), int(row["n_int"]))
     # python sorted() is stable → ties keep reference property order,
     # matching dict(sorted(...)) over an insertion-ordered dict
-    return sorted(stats, key=lambda s: s["std"])
+    return sorted(stats, key=lambda s: s["std"]), counts
 
 
-def bkafi_feature_order(properties: DataFrame, criterion: str = "std") -> list[str]:
-    """Blocking feature order. 'std' is pure statistics
-    (blocking.py:135-138); 'feature_importance' (blocking.py:139-142) needs
-    the trained matcher — wired in operators/matching_model.py."""
-    if criterion != "std":
-        raise NotImplementedError(
-            "feature_importance criterion requires the trained matcher; "
-            "use operators.matching_model.feature_importance_order"
-        )
-    return [s["property"] for s in property_ratio_stats(properties)]
+def bkafi_feature_order(properties: DataFrame) -> list[str]:
+    """Blocking feature order by the 'std' criterion (blocking.py:135-138);
+    the learned 'feature_importance' order is
+    operators/matching_model.py::learned_feature_order."""
+    return [s["property"] for s in property_ratio_stats(properties)[0]]
 
 
 def bkafi_vectors(
@@ -122,7 +137,6 @@ def run_bkafi_blocking(
     dims: list[int],
     k_list: tuple[int, ...] = CAND_PAIRS_PER_ITEM_LIST,
     nn_param: int = NN_PARAM,
-    criterion: str = "std",
     feature_order: list[str] | None = None,
     strategy: str = "auto",
     sdr_factor: bool = False,
@@ -134,12 +148,8 @@ def run_bkafi_blocking(
     ``--sdr_factor``, blocking.py:166-174): cand vectors are multiplied by
     the per-feature train mean ratio before scaling."""
     properties = properties.persist()
-    ratio_stats = property_ratio_stats(properties)
-    order = feature_order or (
-        [s["property"] for s in ratio_stats]
-        if criterion == "std"
-        else bkafi_feature_order(properties, criterion)
-    )
+    ratio_stats, (_, _, n_int) = property_ratio_stats(properties)
+    order = feature_order or [s["property"] for s in ratio_stats]
     factors = (
         {s["property"]: s["mean"] for s in ratio_stats} if sdr_factor else None
     )
@@ -169,13 +179,8 @@ def run_bkafi_blocking(
         "label", (F.col("cand_id") == F.col("index_id")).cast("int")
     ).persist()
 
-    # recall: positives per (dim, rank) → cumulative over rank ≤ k
-    inter = (
-        properties.filter(F.col("source") == "cands")
-        .select("obj_id")
-        .intersect(properties.filter(F.col("source") == "index").select("obj_id"))
-        .count()
-    )
+    # recall: positives per (dim, rank) → cumulative over rank ≤ k,
+    # over |cands ∩ index| from the ratio-stats aggregate
     hist = (
         candidates.filter(F.col("label") == 1)
         .groupBy("bkafi_dim", "rank")
@@ -195,7 +200,7 @@ def run_bkafi_blocking(
                 {
                     "bkafi_dim": dim,
                     "k": k,
-                    "blocking_recall": round(by_rank[k] / inter, 3),
+                    "blocking_recall": round(by_rank[k] / n_int, 3),
                 }
             )
     recall = pd.DataFrame(rows)

@@ -7,16 +7,16 @@ reference process_pairs.py + bkafi_with_threshold.py + classifier.py).
   (process_pairs.py:42-66 numpy-inf semantics; clip config.py:23). Catalyst
   broadcast-joins the smaller side automatically; no UDF anywhere.
 
-- ``matched_pair_distances`` / ``percentile_thresholds``: scaled L2
+- ``matched_pair_vectors`` / ``percentile_thresholds``: scaled L2
   distance of matched train pairs (scaler fit on matched cands,
   bkafi_with_threshold.py:176-182), exact percentiles 0..0.995
   (:20-21,131-134).
 
-- ``threshold_match`` + ``threshold_stats``: filter a kNN candidate table
-  by dist ≤ threshold and compute recall / cand_pairs_num /
-  reduction_ratio per percentile in ONE pass (a distance→max-qualifying-
-  percentile classification instead of the reference's 200 sequential
-  filter sweeps, bkafi_with_threshold.py:239-269 — same outputs).
+- ``threshold_stats``: recall / cand_pairs_num / reduction_ratio of a kNN
+  candidate table filtered by dist ≤ threshold, per percentile in ONE
+  pass (a distance→max-qualifying-percentile classification instead of
+  the reference's 200 sequential filter sweeps,
+  bkafi_with_threshold.py:239-269 — same outputs).
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import MAX_RATIO_VAL, OBJECT_PROPERTIES, THRESHOLD_PERCENTILES
-from .scaler import robust_scaler_fit, robust_scaler_transform
+from .scaler import robust_scaler_fit
 
 
 def split_sides(properties: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -162,12 +162,6 @@ def percentile_thresholds(
 
     qs = exact_percentiles(dists, [col], list(percentiles), n_rows=n_rows)[col]
     return {p: float(v) for p, v in zip(percentiles, qs)}
-
-
-def threshold_match(candidates: DataFrame, threshold: float) -> DataFrame:
-    """Match decisions at one threshold: candidate pair survives iff
-    dist <= threshold (bkafi_with_threshold.py:239-246)."""
-    return candidates.filter(F.col("dist") <= F.lit(threshold))
 
 
 def threshold_stats(

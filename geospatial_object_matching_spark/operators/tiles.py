@@ -23,11 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 import pyspark.sql.types as T
 
-from ..functions.cells import (
-    lonlat_to_tile,
-    points_in_polygon,
-    rasterize_footprint,
-)
+from ..functions.cells import points_in_polygon, rasterize_footprint
 from ..sources.pages import lonlat_of_xy
 
 FOOTPRINT_SCHEMA = T.StructType(

@@ -24,11 +24,11 @@ from ..operators import similarity as SIM
 from ..operators.extract import extract_objects
 from ..operators.knn import knn_join_broadcast
 from ..operators.matching import ratio_sql
-from ..operators.properties import compute_properties
 from ..operators.sampling import sample_ids_fraction
 from ..operators.blocking import (
     bkafi_feature_order,
     bkafi_vectors,
+    property_ratio_stats,
     run_bkafi_blocking,
 )
 from ..sources.pages import generate_pages_df
@@ -938,27 +938,13 @@ def q_geo_threshold_sweep(spark, sf_dir):
     props = pages_to_properties(
         _geo_pages(spark, sf_dir), zoom=15, log1p=True
     ).persist()
-    order = bkafi_feature_order(props)
+    ratio_stats, (n_c, n_i, n_int) = property_ratio_stats(props)
+    order = [s["property"] for s in ratio_stats]
     dists, _ = matched_pair_vectors(props, order[:3])
     thresholds = percentile_thresholds(dists, THRESHOLD_PERCENTILES)
     cands_v, index_v = bkafi_vectors(props, order[:3])
     cand_tbl = knn_join_broadcast(cands_v, index_v, 100, round_dists=7)
-    sc = (
-        props.groupBy("obj_id")
-        .agg(
-            F.max((F.col("source") == "cands").cast("int")).alias("c"),
-            F.max((F.col("source") == "index").cast("int")).alias("i"),
-        )
-        .agg(
-            F.sum("c").alias("n_c"),
-            F.sum("i").alias("n_i"),
-            F.sum(F.col("c") * F.col("i")).alias("n_int"),
-        )
-        .first()
-    )
-    stats = threshold_stats(
-        cand_tbl, thresholds, int(sc["n_c"]), int(sc["n_i"]), int(sc["n_int"])
-    )
+    stats = threshold_stats(cand_tbl, thresholds, n_c, n_i, n_int)
     # threshold_val is a raw percentile interpolation — round it so the
     # independent numpy oracle (np.percentile differs in ulps from Spark's
     # exact percentile) lands on the same bits

@@ -117,12 +117,67 @@ class TestProperties:
 
     def test_ratio_stats_match_oracle(self, properties, oracle_state):
         _, _, prop_dict = oracle_state
-        engine = property_ratio_stats(properties)
+        engine, _ = property_ratio_stats(properties)
         oracle = O.property_ratios(prop_dict)
         assert [s["property"] for s in engine] == list(oracle.keys())
         for s in engine:
             assert s["mean"] == pytest.approx(oracle[s["property"]]["mean"], abs=2e-3)
             assert s["std"] == pytest.approx(oracle[s["property"]]["std"], abs=2e-3)
+
+    def test_ratio_stats_counts_match_independent_count(
+        self, properties, oracle_state
+    ):
+        _, od, _ = oracle_state
+
+        def ids(source):
+            return properties.filter(F.col("source") == source).select("obj_id")
+
+        _, counts = property_ratio_stats(properties)
+        assert counts == (
+            ids("cands").distinct().count(),
+            ids("index").distinct().count(),
+            ids("cands").intersect(ids("index")).count(),
+        )
+        assert counts == (
+            len(od["cands"]),
+            len(od["index"]),
+            len(set(od["cands"]) & set(od["index"])),
+        )
+
+    def test_ratio_stats_counts_by_presence_ratios_by_first_property(
+        self, spark
+    ):
+        """Counts take every id present on a side; the ratio stats take
+        only ids whose first property is non-null on both sides. ``b``'s
+        cands row has a null first property, ``c`` is cands-only and ``d``
+        index-only: counts (3, 3, 2), ratios from ``a`` alone (b's 4.0
+        ratio would move every mean but the first)."""
+        from geospatial_object_matching_spark.config import OBJECT_PROPERTIES
+
+        props = list(OBJECT_PROPERTIES)
+        rows = [
+            ("a", "cands", *[2.0] * len(props)),
+            ("a", "index", *[3.0] * len(props)),
+            ("b", "cands", None, *[1.0] * (len(props) - 1)),
+            ("b", "index", *[4.0] * len(props)),
+            ("c", "cands", *[5.0] * len(props)),
+            ("d", "index", *[6.0] * len(props)),
+        ]
+        schema = ["obj_id string", "source string"] + [f"{p} double" for p in props]
+        df = spark.createDataFrame(rows, ", ".join(schema))
+
+        def ids(source):
+            return df.filter(F.col("source") == source).select("obj_id")
+
+        stats, counts = property_ratio_stats(df)
+        assert counts == (3, 3, 2)
+        assert counts == (
+            ids("cands").distinct().count(),
+            ids("index").distinct().count(),
+            ids("cands").intersect(ids("index")).count(),
+        )
+        assert [s["property"] for s in stats] == props
+        assert all(s["mean"] == 1.5 and s["std"] == 0.0 for s in stats)
 
 
 class TestBlocking:
